@@ -201,13 +201,13 @@ class MaterializedView:
         # publish succeeds but the commit raises, the next refresh on
         # this instance must re-run repair_check or it would re-read the
         # stale watermark and double-count the published delta (r12
-        # ADVICE). Re-armed only after the commit completes.
+        # ADVICE). Re-armed only after a commit completes.
         self._repair_probed = False
         publish_snapshot(merged, self.table_root, version=version)
         wm = self._max_ts_string(src)
         if wm is not None:
             self.ledger.commit(self.name, wm)
-        self._repair_probed = True
+            self._repair_probed = True  # proven only by a commit
         return version
 
     def refresh_incremental(self, spark: SparkSession) -> str | None:
@@ -257,7 +257,7 @@ class MaterializedView:
         publish_snapshot(merged, self.table_root, version=version)
         if probe["__wm"] is not None:
             self.ledger.commit(self.name, probe["__wm"])
-        self._repair_probed = True
+            self._repair_probed = True  # proven only by a commit
         return version
 
     def repair_check(self, spark: SparkSession) -> bool:

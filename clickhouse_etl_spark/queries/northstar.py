@@ -1547,9 +1547,9 @@ def _curate_oracle() -> str:
 def ns_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end curation composition (text/curation.py): the survivor
     id set + deterministic split after exact dedup, near-dup cluster
-    removal, span cutting, and the quality gate. with_report=False —
-    the data card's per-stage counts are composition *accounting* (each
-    is a separate action); the row pins the composed RESULT."""
+    removal, span cutting, and the quality gate. The row pins the
+    composed RESULT; the data card rides along unread (its counts fill
+    during whatever action runs the row, at no extra pass)."""
     from clickhouse_etl_spark.text.curation import curate_corpus
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1560,7 +1560,6 @@ def ns_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_tokens=5,
         hash_family="poly",
         minhash_max_bucket_size=None,
-        with_report=False,
     )
     return res.corpus.select("doc_id", "split")
 

@@ -16,17 +16,25 @@ an exact duplicate; the quality filter runs AFTER cutting because
 cutting shortens documents below the length floor).
 
 Scale: the composition adds nothing to the operators' own costs — each
-stage consumes the previous stage's DataFrame lazily; only the data
-card forces one count per stage (skippable with ``with_report=False``
-for fire-and-forget runs).
+stage consumes the previous stage's DataFrame lazily, and the data card
+runs no pass of its own. Every count is an unnamed
+:class:`pyspark.sql.Observation` on a frame that every execution of the
+corpus runs in full (the map side of an exchange or the build side of
+a join), so the caller's first full action on ``corpus`` — a write,
+``collect`` or ``count`` — fills the whole card; reading it afterwards
+fires no job. Reading it before any action runs the chain once. After a
+partial first action (``limit``, ``show``), or when Spark skipped an
+observed branch (a run with nothing to drop at near-dup), the card
+counts every stage instead: the cost the card had when it was built
+from one ``count()`` per stage.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-from dataclasses import dataclass, field
+from collections.abc import Iterator, Mapping, Sequence
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from clickhouse_etl_spark.text.analysis import (
@@ -38,9 +46,109 @@ from clickhouse_etl_spark.text.dedup import (
     minhash_near_duplicates,
     neardup_clusters,
 )
-from clickhouse_etl_spark.text.scoring import filter_by_score
+from clickhouse_etl_spark.text.scoring import score_documents
 from clickhouse_etl_spark.text.spans import cut_duplicated_spans
 from clickhouse_etl_spark.operators.sampling import assign_splits
+
+
+def _observed(df: DataFrame) -> tuple[Observation, DataFrame]:
+    """``df`` with a row count attached. Unnamed: two live curation
+    runs in one session never share a metric."""
+    obs = Observation()
+    return obs, df.observe(obs, F.count(F.lit(1)).alias("n"))
+
+
+def _observed_n(obs: Observation) -> int | None:
+    """The observed count, or None while no action has filled it or
+    the action that did never ran the observed node (Spark completes
+    it with an empty row). Never blocks: ``Observation.get`` waits
+    forever if no action ever comes."""
+    if not obs._jo.future().isCompleted():
+        return None
+    row = obs._jo.getRow()
+    return row.getLong(0) if row.size() else None
+
+
+class DataCard(Mapping):
+    """Document counts after every curation stage, plus policy lines.
+
+    A stage count is a signed sum of observed counts (near-dup removal
+    is the exact-dedup survivors minus the dropped members), each taken
+    where every execution of the corpus runs in full. ``final`` repeats
+    the last dropping stage — the PII scrub and split assignment drop no
+    row — and one more observation on the corpus itself checks it: a
+    partial first action (``limit(n).collect()``, ``show``) leaves that
+    witness short, and so does an observation the planner happened to
+    put in the last stage. Either way the card falls back to counting
+    every stage's frame. Resolved once, on first read; iterating the
+    keys reads nothing.
+    """
+
+    def __init__(self) -> None:
+        self._entries: dict[str, str | tuple[DataFrame, tuple]] = {}
+        self._corpus: DataFrame | None = None
+        self._witness: Observation | None = None
+        self._values: dict[str, int | str] | None = None
+
+    def policy(self, name: str, text: str) -> None:
+        self._entries[name] = text
+
+    def count(self, name: str, frame: DataFrame, *terms) -> None:
+        """Stage ``name`` keeps ``sum(sign * n(obs))`` rows over its
+        ``(obs, sign)`` terms; ``frame`` is its output, counted only by
+        the fallback."""
+        self._entries[name] = (frame, terms)
+
+    def seal(self, corpus: DataFrame) -> DataFrame:
+        self._witness, corpus = _observed(corpus)
+        self._corpus = corpus
+        return corpus
+
+    def _resolve(self) -> dict[str, int | str]:
+        if self._values is not None:
+            return self._values
+        stages = {k: v for k, v in self._entries.items() if isinstance(v, tuple)}
+        obs = {o for _, terms in stages.values() for o, _ in terms}
+        obs.add(self._witness)
+        spark = self._corpus.sparkSession
+        # Observations are filled from the listener bus, after the action
+        # returns: drain it before deciding that no action ran.
+        bus = spark.sparkContext._jsc.sc().listenerBus()
+        bus.waitUntilEmpty()
+        if any(_observed_n(o) is None for o in obs):
+            self._corpus.write.format("noop").mode("overwrite").save()
+            bus.waitUntilEmpty()
+        n = {o: _observed_n(o) for o in obs}
+        if None in n.values():
+            counts = None
+        else:
+            counts = {
+                k: sum(sign * n[o] for o, sign in terms)
+                for k, (_, terms) in stages.items()
+            }
+        if counts is None or counts["final"] != n[self._witness]:
+            counts = {k: frame.count() for k, (frame, _) in stages.items()}
+        self._values = {
+            k: counts[k] if k in stages else v for k, v in self._entries.items()
+        }
+        return self._values
+
+    def __getitem__(self, key: str) -> int | str:
+        if key not in self._entries:
+            raise KeyError(key)
+        return self._resolve()[key]
+
+    def __contains__(self, key: object) -> bool:
+        return key in self._entries
+
+    def __iter__(self) -> Iterator[str]:
+        return iter(self._entries)
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+    def __repr__(self) -> str:
+        return f"DataCard({self._resolve()!r})"
 
 
 @dataclass
@@ -48,7 +156,7 @@ class CurationResult:
     """Final corpus + the per-stage data card."""
 
     corpus: DataFrame
-    report: dict[str, int | str] = field(default_factory=dict)
+    report: DataCard
 
 
 def curate_corpus(
@@ -60,7 +168,6 @@ def curate_corpus(
     min_tokens: int = 5,
     score_threshold: float | None = None,
     split_weights: dict[str, float] | None = None,
-    with_report: bool = True,
     url_col: str | None = None,
     domain_blocklist: Sequence[str] | DataFrame | None = None,
     url_dedup_strategy: str = "auto",
@@ -79,8 +186,10 @@ def curate_corpus(
     is a placeholder — inject a real model by calling
     :func:`text.scoring.filter_by_score` yourself between stages).
     Returns the curated corpus (original columns + ``n_redactions`` +
-    ``split``) and, when ``with_report``, document counts after every
-    stage.
+    ``split``) and its :class:`DataCard`: document counts after every
+    stage, filled by the caller's first full action on the corpus (see
+    the module doc for what reading it early costs). The counts assume
+    ``id_col`` is unique, as every id-keyed stage does.
 
     ``url_col`` turns on the crawl-level stage 0 (text/web.py): domain
     blocklist filter, then canonical-URL dedup — BEFORE text-level
@@ -132,25 +241,27 @@ def curate_corpus(
         raise ValueError(
             f"neardup_score_col {neardup_score_col!r} is not a column of df"
         )
-    report: dict[str, int | str] = {}
-
-    def note(stage: str, d: DataFrame) -> DataFrame:
-        if with_report:
-            report[stage] = d.count()
-        return d
-
-    note("input", df)
+    # Every count below is observed where every execution runs in full:
+    # the map side of the exact-dedup digest shuffle (and of url_dedup's
+    # shuffle) or the build side of a keep/drop join. The stage outputs
+    # themselves run in the corpus's last stage, which a partial action
+    # reads only in part. The input count rides the exact-dedup branch
+    # alone: on the main branch too, a second copy of the metric would
+    # run in the last stage, and Spark reports only one of the copies.
+    card = DataCard()
+    obs, observed = _observed(df)
+    card.count("input", df, (obs, 1))
 
     # 0. Crawl-level stage (optional): domain blocklist, then canonical-
     #    URL dedup. Cheapest cuts first — both run before any shingling.
     if url_col is not None:
         from clickhouse_etl_spark.text.web import filter_by_domain, url_dedup
 
+        df = observed  # below url_dedup's shuffle on every branch
         if domain_blocklist is not None:
-            df = note(
-                "domain_filter",
-                filter_by_domain(df, url_col, blocklist=domain_blocklist),
-            )
+            df = filter_by_domain(df, url_col, blocklist=domain_blocklist)
+            obs, df = _observed(df)
+            card.count("domain_filter", df, (obs, 1))
         # collision-proof temp name: a corpus that already carries a
         # 'canonical_url' column must pass through untouched.
         # url_dedup_strategy='auto' (the default): re-crawl floods make
@@ -173,22 +284,23 @@ def curate_corpus(
                 canonicalize_url(url_col).alias("__c")
             ).filter(F.col("__c").isNotNull())
             plan = choose_dedup_strategy(canon, ["__c"])
-        if with_report:
-            report["url_dedup_plan"] = plan
-        df = note(
-            "url_dedup",
-            url_dedup(
-                df, url_col, order_col=id_col,
-                canon_col="__curate_canon_url", strategy=plan,
-            ).drop("__curate_canon_url"),
-        )
+        card.policy("url_dedup_plan", plan)
+        df = url_dedup(
+            df, url_col, order_col=id_col,
+            canon_col="__curate_canon_url", strategy=plan,
+        ).drop("__curate_canon_url")
+        obs, observed = _observed(df)
+        card.count("url_dedup", df, (obs, 1))
 
     # 1. Exact dedup: keep each byte-identical text's canonical (min id)
     #    copy. Digest-only shuffle.
-    keep = exact_dedup(df, text_col=text_col, id_col=id_col).select(
+    keep = exact_dedup(observed, text_col=text_col, id_col=id_col).select(
         F.col("keep_id").alias(id_col)
     )
-    cur = note("exact_dedup", df.join(keep, on=id_col, how="left_semi"))
+    obs, keep = _observed(keep)
+    cur = df.join(keep, on=id_col, how="left_semi")
+    card.count("exact_dedup", cur, (obs, 1))
+    terms = ((obs, 1),)
 
     # 2. Near-dup removal: MinHash-LSH pairs → transitive clusters →
     #    drop every non-representative member. Runs on the exact-deduped
@@ -220,19 +332,21 @@ def curate_corpus(
         drop = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select(
             F.col("doc_id").alias(id_col)
         )
-    if with_report:
-        report["neardup_keep"] = (
-            f"best:{neardup_score_col}" if neardup_score_col else "min_id"
-        )
-    cur = note("near_dedup", cur.join(drop, on=id_col, how="left_anti"))
+    card.policy(
+        "neardup_keep",
+        f"best:{neardup_score_col}" if neardup_score_col else "min_id",
+    )
+    # drop holds distinct ids of exact-dedup survivors
+    obs, drop = _observed(drop)
+    terms += ((obs, -1),)
+    cur = cur.join(drop, on=id_col, how="left_anti")
+    card.count("near_dedup", cur, *terms)
 
     # 3. Substring dedup: cut every non-first duplicated >=k-token span
     #    (each repeated passage survives once corpus-wide). After
     #    document-level dedup so kept copies anchor the spans.
-    cur = note(
-        "span_cut",
-        cut_duplicated_spans(cur, k=span_k, id_col=id_col, text_col=text_col),
-    )
+    cur = cut_duplicated_spans(cur, k=span_k, id_col=id_col, text_col=text_col)
+    card.count("span_cut", cur, *terms)  # cutting rewrites, never drops
 
     # 4. Heuristic quality filter — after cutting (cutting shortens
     #    documents; the length floor must see the final text).
@@ -240,25 +354,24 @@ def curate_corpus(
     #    so rename through when the caller uses a different id.
     qin = cur if id_col == "doc_id" else cur.withColumnRenamed(id_col, "doc_id")
     decisions = corpus_quality_filter(qin, text_col=text_col, min_tokens=min_tokens)
-    cur = note(
-        "quality_filter",
-        cur.join(
-            decisions.filter(F.col("keep")).select(
-                F.col("doc_id").alias(id_col)
-            ),
-            on=id_col,
-            how="left_semi",
-        ),
+    obs, kept = _observed(
+        decisions.filter(F.col("keep")).select(F.col("doc_id").alias(id_col))
     )
+    terms = ((obs, 1),)
+    cur = cur.join(kept, on=id_col, how="left_semi")
+    card.count("quality_filter", cur, *terms)
 
-    # 5. Optional model-based filter (batch-inference seam).
+    # 5. Optional model-based filter (batch-inference seam): the
+    #    text.scoring.filter_by_score join, with its keep set observed.
     if score_threshold is not None:
-        cur = note(
-            "model_filter",
-            filter_by_score(
-                cur, score_threshold, id_col=id_col, text_col=text_col
-            ),
+        obs, kept = _observed(
+            score_documents(cur, id_col=id_col, text_col=text_col)
+            .filter(F.col("score") >= score_threshold)
+            .select(id_col)
         )
+        terms = ((obs, 1),)
+        cur = cur.join(kept, on=id_col, how="left_semi")
+        card.count("model_filter", cur, *terms)
 
     # 5b. Optional DSIR targeted selection: fit target-vs-pool hashed
     #     n-gram log-ratios, keep a Gumbel-top-n importance resample.
@@ -284,15 +397,15 @@ def curate_corpus(
             temperature=dsir_temperature, seed=dsir_seed,
             hash_family=hash_family,
         )
-        if with_report:
-            report["dsir"] = (
-                f"n={dsir_n} buckets={dsir_num_buckets} "
-                f"temp={dsir_temperature} seed={dsir_seed}"
-            )
-        cur = note(
-            "dsir_select",
-            cur.join(picked.select(id_col), on=id_col, how="left_semi"),
+        card.policy(
+            "dsir",
+            f"n={dsir_n} buckets={dsir_num_buckets} "
+            f"temp={dsir_temperature} seed={dsir_seed}",
         )
+        obs, picked = _observed(picked.select(id_col))
+        terms = ((obs, 1),)
+        cur = cur.join(picked, on=id_col, how="left_semi")
+        card.count("dsir_select", cur, *terms)
 
     # 6. PII scrub — last text rewrite, so redaction placeholders can't
     #    perturb dedup hashes or quality token counts. Applied in place
@@ -316,11 +429,8 @@ def curate_corpus(
         split_bucket = F.pmod(
             poly_affine_id_expr(cur, id_col, 1), F.lit(_BUCKETS)
         )
-    cur = note(
-        "final",
-        assign_splits(
-            cur, key_cols=[id_col], weights=split_weights,
-            bucket_expr=split_bucket,
-        ),
+    cur = assign_splits(
+        cur, key_cols=[id_col], weights=split_weights, bucket_expr=split_bucket,
     )
-    return CurationResult(corpus=cur, report=report)
+    card.count("final", cur, *terms)  # the scrub and splits drop no row
+    return CurationResult(corpus=card.seal(cur), report=card)

@@ -44,6 +44,27 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn) -> (fn(), jobs)``: run ``fn`` under a fresh job
+    group and count the Spark jobs it fired (the status tracker's
+    per-group job ids — works with the UI disabled)."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
 def rows_set(df, *cols):
     """Collect as a set of tuples (order-insensitive compare)."""
     sel = df.select(*cols) if cols else df

@@ -14,11 +14,30 @@ from clickhouse_etl_spark.text.curation import curate_corpus
 
 SF_DIR = "/root/testdata/sf0.001"
 
+# Data cards of the sf0.001 documents as one count() per stage frame
+# reported them; the observed card must reproduce them exactly.
+DEFAULT_CARD = {
+    "input": 500, "exact_dedup": 500, "neardup_keep": "min_id",
+    "near_dedup": 476, "span_cut": 476, "quality_filter": 476, "final": 476,
+}
+MODEL_CARD = {**DEFAULT_CARD, "model_filter": 192, "final": 192}
+DSIR_CARD = {
+    **DEFAULT_CARD, "dsir": "n=50 buckets=64 temp=1.0 seed=11",
+    "dsir_select": 50, "final": 50,
+}
+URL_CARD = {
+    "input": 500, "domain_filter": 400, "url_dedup_plan": "window",
+    "url_dedup": 40, "exact_dedup": 40, "neardup_keep": "min_id",
+    "near_dedup": 40, "span_cut": 40, "quality_filter": 40, "final": 40,
+}
+
 
 def test_full_chain_on_documents(spark):
     docs = load_table(spark, SF_DIR, "documents")
     res = curate_corpus(docs)
     r = res.report
+    assert list(r) == list(DEFAULT_CARD)  # stage order, read for free
+    assert dict(r) == DEFAULT_CARD
     # Monotone shrinkage through the drop stages.
     assert r["input"] == 500
     assert r["input"] >= r["exact_dedup"] >= r["near_dedup"]
@@ -42,8 +61,8 @@ def test_full_chain_on_documents(spark):
 
 def test_determinism(spark):
     docs = load_table(spark, SF_DIR, "documents")
-    a = curate_corpus(docs, with_report=False).corpus
-    b = curate_corpus(docs, with_report=False).corpus
+    a = curate_corpus(docs).corpus
+    b = curate_corpus(docs).corpus
     sa = {tuple(r) for r in a.select("doc_id", "text", "split").collect()}
     sb = {tuple(r) for r in b.select("doc_id", "text", "split").collect()}
     assert sa == sb
@@ -56,6 +75,9 @@ def test_model_filter_stage(spark):
     assert "model_filter" in with_model.report
     assert "model_filter" not in without.report
     assert with_model.report["final"] <= without.report["final"]
+    # two live results in one session keep their own cards
+    assert dict(with_model.report) == MODEL_CARD
+    assert dict(without.report) == DEFAULT_CARD
 
 
 def test_custom_id_column(spark):
@@ -65,16 +87,43 @@ def test_custom_id_column(spark):
         "doc_id", "document_key"
     )
     res = curate_corpus(docs, id_col="document_key")
-    assert res.report["final"] > 0
+    assert dict(res.report) == DEFAULT_CARD
     assert "document_key" in res.corpus.columns
     assert "doc_id" not in res.corpus.columns
 
 
-def test_no_report_skips_counts(spark):
+def test_card_costs_no_extra_pass(spark, count_jobs, tmp_path):
+    """The card is filled by the caller's own write: reading it after
+    fires no job. Read before any action, it runs the chain once — as
+    many jobs as one execution of an identical corpus."""
     docs = load_table(spark, SF_DIR, "documents")
-    res = curate_corpus(docs, with_report=False)
-    assert res.report == {}
-    assert res.corpus.count() > 0
+    written = curate_corpus(docs)
+    early = curate_corpus(docs, score_threshold=0.45)
+    twin = curate_corpus(docs, score_threshold=0.45)
+
+    written.corpus.write.parquet(str(tmp_path / "corpus"))
+    card, jobs = count_jobs(lambda: dict(written.report))
+    assert jobs == 0
+    assert card == DEFAULT_CARD
+
+    card, jobs = count_jobs(lambda: dict(early.report))
+    _, one_run = count_jobs(
+        lambda: twin.corpus.write.format("noop").mode("overwrite").save()
+    )
+    assert 0 < jobs <= one_run
+    assert card == MODEL_CARD
+    # resolved once: a second read is free
+    assert count_jobs(lambda: early.report["final"]) == (192, 0)
+
+
+def test_card_exact_after_partial_first_action(spark):
+    """A partial first action fills the card's observations with short
+    counts where they run in the corpus's last stage; the card notices
+    (its witness on the corpus disagrees) and still reads exact."""
+    docs = load_table(spark, SF_DIR, "documents")
+    res = curate_corpus(docs)
+    assert len(res.corpus.limit(3).collect()) == 3
+    assert dict(res.report) == DEFAULT_CARD
 
 
 def test_decontaminate_drops_leaked_docs(spark):
@@ -149,6 +198,7 @@ def test_curate_corpus_url_stage(spark):
     # of which the 10 with path%5==4 are blocked -> 40
     assert rep["url_dedup"] == 40
     assert rep["final"] <= rep["url_dedup"]
+    assert dict(rep) == URL_CARD
     assert "url" in out.corpus.columns
 
 
@@ -187,8 +237,7 @@ def test_neardup_keep_best_policy(spark):
         assert chars[best[cid]] >= chars[base[cid]]
 
     res = curate_corpus(docs, neardup_score_col="n_chars")
-    assert res.report["neardup_keep"] == "best:n_chars"
-    assert res.report["final"] > 0
+    assert dict(res.report) == {**DEFAULT_CARD, "neardup_keep": "best:n_chars"}
     with pytest.raises(ValueError, match="neardup_score_col"):
         curate_corpus(docs, neardup_score_col="nchars_typo")
 
@@ -206,13 +255,11 @@ def test_dsir_selection_stage(spark):
         docs, dsir_target=target, dsir_n=50, dsir_num_buckets=64,
         dsir_seed=11,
     )
-    assert res.report["dsir_select"] == 50
-    assert res.report["final"] == 50
-    assert "n=50" in res.report["dsir"]
+    assert dict(res.report) == DSIR_CARD
     # deterministic under the same seed
     res2 = curate_corpus(
         docs, dsir_target=target, dsir_n=50, dsir_num_buckets=64,
-        dsir_seed=11, with_report=False,
+        dsir_seed=11,
     )
     a = sorted(r.doc_id for r in res.corpus.select("doc_id").collect())
     b = sorted(r.doc_id for r in res2.corpus.select("doc_id").collect())

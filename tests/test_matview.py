@@ -122,6 +122,30 @@ def test_summing_view_repair_after_lost_watermark(spark, tmp_path):
     assert view.repair_check(spark) is False  # idempotent
 
 
+def test_incremental_without_watermark_stays_unproven(spark, tmp_path):
+    """A refresh whose batch yields no watermark (``__wm`` NULL) publishes
+    but commits nothing, so the instance must not mark its state proven:
+    the next refresh re-runs the repair probe."""
+    batches = [B1]
+    view = MaterializedView(
+        name="totals",
+        table_root=str(tmp_path / "totals"),
+        source=_mk_source(spark, batches),
+        keys=["k"],
+        ts_col="ts",
+        strategy="summing",
+        sum_cols=["v"],
+    )
+    view.refresh_full(spark)
+    assert view._repair_probed
+    committed = view.ledger.get("totals")
+    batches.append(B2)
+    view._wm_expr = lambda: F.max(F.lit(None).cast("string"))
+    assert view.refresh_incremental(spark) is not None
+    assert view.ledger.get("totals") == committed
+    assert view._repair_probed is False
+
+
 def test_view_validation(spark, tmp_path):
     with pytest.raises(ValueError):
         MaterializedView(

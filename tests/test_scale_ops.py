@@ -518,6 +518,12 @@ def test_curate_records_url_dedup_plan_decision(spark):
     )
     res = curate_corpus(df, url_col="url", min_tokens=2)
     assert res.report.get("url_dedup_plan") == "window"  # balanced
+    # the card as one count() per stage reported it
+    assert dict(res.report) == {
+        "input": 20, "url_dedup_plan": "window", "url_dedup": 20,
+        "exact_dedup": 20, "neardup_keep": "min_id", "near_dedup": 20,
+        "span_cut": 20, "quality_filter": 20, "final": 20,
+    }
     # pinned strategies skip the measurement and still record the plan
     res2 = curate_corpus(
         df, url_col="url", min_tokens=2, url_dedup_strategy="agg"

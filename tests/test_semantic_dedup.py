@@ -333,9 +333,7 @@ def test_poly_id_family_rejects_non_integral_ids(spark):
         "doc_id string, text string",
     )
     with pytest.raises(ValueError, match="integral id column"):
-        curate_corpus(
-            docs, hash_family="poly", with_report=False
-        ).corpus.collect()
+        curate_corpus(docs, hash_family="poly").corpus.collect()
 
 
 def test_probe_dims_modal_and_null_led_fallback(spark):

@@ -369,7 +369,7 @@ def test_curate_preserves_existing_canonical_url_column(spark):
         ],
         "doc_id long, text string, url string, canonical_url string",
     )
-    res = curate_corpus(df, url_col="url", min_tokens=2, with_report=False)
+    res = curate_corpus(df, url_col="url", min_tokens=2)
     got = {r.doc_id: r.canonical_url for r in res.corpus.collect()}
     assert got == {1: "orig-1", 2: "orig-2"}
 
