@@ -60,6 +60,9 @@ _RUNTIME_CONFS = {
     # ceiling — see session._DEFAULT_CONF. Applied here too so queries
     # run on a caller-owned session get the same planner behavior.
     "spark.sql.codegen.hugeMethodLimit": "8000",
+    # Perf: plan persisted intermediates with AQE, as session._DEFAULT_CONF
+    # does (coalesced partitions instead of spark.sql.shuffle.partitions).
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
 }
 
 

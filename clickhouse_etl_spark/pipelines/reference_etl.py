@@ -1072,8 +1072,10 @@ def student_transcript(
         ).alias("detail"),
     )
 
-    # Both aggregations below consume this plan; materialize it once
-    # instead of recomputing the whole transcript chain per branch.
+    # Each branch below runs one groupBy over this plan. The persist pays
+    # off across calls: the totals-only and the detailed transcript
+    # (pl_transcript_totals and pl_transcript_details in one bench pass)
+    # share this cache entry instead of each recomputing the chain.
     detail_base = detail_base.transform(materialize)
 
     group_keys = [

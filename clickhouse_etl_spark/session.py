@@ -10,6 +10,12 @@ that makes the same workloads survive a 1000-executor / 100 TB deployment:
   etl_student_scores_subject_month_to_clickhouse.py:45-53); non-ANSI casts
   reproduce exactly that null-on-bad-cast semantic.
 - Arrow enabled for the pandas-UDF paths (text/similarity operators).
+- Cached plans planned with AQE too
+  (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``):
+  Spark plans a cached query with AQE off unless this is set, so every
+  ``util.materialize`` persist kept ``spark.sql.shuffle.partitions``
+  fixed partitions and every stage over a small cached rollup ran that
+  many mostly empty tasks.
 """
 
 from __future__ import annotations
@@ -18,9 +24,12 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults chosen for the local[32] test harness; on a real cluster the
-# same keys are what you would tune (shuffle partitions ≈ 2-3× total cores,
-# maxPartitionBytes to keep scan tasks ~128MB).
+# Shuffle partitions are an upper bound, not a task count: AQE coalesces
+# each exchange, and with the cached-plan key below it does so for
+# persisted intermediates too. 32 covers the local hosts this runs on; on
+# a real cluster the same keys are what you would tune (shuffle
+# partitions ≈ 2-3× total cores, maxPartitionBytes to keep scan tasks
+# ~128MB).
 _DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -49,6 +58,12 @@ _DEFAULT_CONF: dict[str, str] = {
     # the widest fused stages (the 35-column fact select) with no
     # steady-state loss.
     "spark.sql.codegen.hugeMethodLimit": "8000",
+    # Plan persisted intermediates with AQE (see the module doc): a table
+    # written from a cached rollup lands as a few files, not 32+. The
+    # trade: a cached plan's partitioning is no longer known statically,
+    # so a join on its keys may add one exchange. Mirrored in
+    # catalog._RUNTIME_CONFS.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
 }
 
 

@@ -37,6 +37,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from clickhouse_etl_spark.catalog import ensure_runtime_confs
 from clickhouse_etl_spark.text.analysis import (
     corpus_quality_filter,
     pii_scrub_exprs,
@@ -241,6 +242,10 @@ def curate_corpus(
         raise ValueError(
             f"neardup_score_col {neardup_score_col!r} is not a column of df"
         )
+    # The poly hash family wraps int64 arithmetic, which ANSI mode (the
+    # Spark 4 default on a caller-owned session) turns into overflow
+    # errors; the persists below also need the engine's planner confs.
+    ensure_runtime_confs(df.sparkSession)
     # Every count below is observed where every execution runs in full:
     # the map side of the exact-dedup digest shuffle (and of url_dedup's
     # shuffle) or the build side of a keep/drop join. The stage outputs

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from clickhouse_etl_spark.catalog import ensure_runtime_confs
 from clickhouse_etl_spark.text.dedup import (
     _POLY_FOLD,
     _signed64,
@@ -220,6 +221,8 @@ def dsir_resample(
         raise ValueError("n must be >= 1")
     if temperature <= 0:
         raise ValueError("temperature must be positive")
+    # the poly permutation wraps int64 arithmetic: ANSI mode must be off
+    ensure_runtime_confs(scores.sparkSession)
     # u in (0,1) open: (h mod 2^52 + 1) / (2^52 + 2) never hits 0 or 1
     m = 1 << 52
     if hash_family == "poly":

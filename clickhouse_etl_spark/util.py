@@ -66,10 +66,10 @@ def tracked_saw_eager() -> bool:
 def set_materialize_mode(mode: str | None) -> None:
     """Set the engine-wide default for :func:`materialize`.
 
-    ``localCheckpoint`` (default) | ``checkpoint`` | ``persist`` | ``none``.
-    ``None`` resets to the built-in default. Can also be set via the
-    ``SPARK_GRAFT_MATERIALIZE`` environment variable (the explicit setter
-    wins).
+    ``persist`` (default) | ``localCheckpoint`` | ``checkpoint`` | ``none``.
+    ``None`` resets to the built-in default, which the
+    ``SPARK_GRAFT_MATERIALIZE`` environment variable overrides (the
+    explicit setter wins over both).
     """
     if mode is not None and mode not in _MATERIALIZE_MODES:
         raise ValueError(f"materialize mode must be one of {_MATERIALIZE_MODES}")

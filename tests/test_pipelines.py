@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
+import contextlib
 import json
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -149,6 +151,79 @@ def test_incremental_fact_equals_full_rebuild(spark):
 
     assert incremental.columns == full.columns
     assert canon(incremental) == canon(full)
+
+
+# --- adaptively planned persisted intermediates ----------------------------
+
+
+@contextlib.contextmanager
+def _shuffle_partitions(spark, n):
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _completed_tasks(sc, group):
+    tracker = sc.statusTracker()
+    stages = (
+        tracker.getStageInfo(stage)
+        for job in tracker.getJobIdsForGroup(group)
+        for stage in tracker.getJobInfo(job).stageIds
+    )
+    return sum(info.numCompletedTasks for info in stages if info is not None)
+
+
+def test_materialized_rollup_is_planned_adaptively(spark, count_jobs):
+    """A persist on any session the engine set up is planned with AQE: a
+    small cached groupBy reads back coalesced, so a scan over it runs a
+    few tasks, not one per spark.sql.shuffle.partitions partition."""
+    from clickhouse_etl_spark.catalog import ensure_runtime_confs
+    from clickhouse_etl_spark.util import materialize
+
+    sc = spark.sparkContext
+    ensure_runtime_confs(spark)
+    spark.catalog.clearCache()
+    with _shuffle_partitions(spark, 32):
+        rollup = materialize(
+            spark.range(6000)
+            .groupBy((F.col("id") % 97).alias("k"))
+            .agg(F.sum("id").alias("s")),
+            mode="persist",
+        )
+        assert rollup.count() == 97  # fills the cache
+
+        def rescan():
+            group = sc.getLocalProperty("spark.jobGroup.id")
+            return rollup.count(), _completed_tasks(sc, group)
+
+        (n, tasks), jobs = count_jobs(rescan)
+        partitions = rollup.rdd.getNumPartitions()
+    rollup.unpersist()
+    assert n == 97 and jobs >= 1
+    assert partitions < 32
+    assert 0 < tasks < 32
+
+
+def test_fact_snapshot_is_not_one_file_per_shuffle_partition(spark, tmp_path):
+    """The wide fact's persisted rollups coalesce like any other AQE
+    exchange, so its snapshot lands as a few files, not 32+."""
+    from clickhouse_etl_spark.pipelines.reference_etl import monthly_subject_fact
+    from clickhouse_etl_spark.sinks.staging import publish_snapshot
+
+    wh = synthetic_warehouse(spark, SF_SMOKE)
+    spark.catalog.clearCache()
+    with _shuffle_partitions(spark, 32):
+        fact = monthly_subject_fact(
+            wh["evaluations"], wh["scores"], wh["students"],
+            wh["structures"], wh["subject_dim"],
+        )
+        snap = publish_snapshot(fact, str(tmp_path / "fact"), "1")
+    spark.catalog.clearCache()
+    files = list(Path(snap).glob("part-*.parquet"))
+    assert 0 < len(files) < 32
 
 
 # --- S4 document source ----------------------------------------------------
