@@ -236,7 +236,7 @@ def build_bench_session(cpus: int):
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Codegen stops at the JIT's 8 KB bytecode ceiling (HotSpot won't
         # compile bigger methods): skips multi-second Janino compiles of
-        # the widest fused stages. Mirrors session._DEFAULT_CONF.
+        # the widest fused stages. Mirrors catalog._RUNTIME_CONFS.
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
         .getOrCreate()
     )

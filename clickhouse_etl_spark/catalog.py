@@ -36,12 +36,13 @@ TEST_TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Runtime SQL confs the engine's semantics depend on. Set defensively on
-# every load because callers may hand us a session we didn't build
-# (session.py applies the same set at build time, but that only covers
-# sessions created through get_spark()):
+# Runtime SQL confs the engine's semantics depend on — the one home of
+# these keys. session.get_spark applies them at build time; load_table
+# applies them again on every load because callers may hand us a session
+# we didn't build:
 #  - nanosAsLong: events.parquet stores ts as TIMESTAMP(NANOS), which
-#    vanilla Spark rejects with PARQUET_TYPE_ILLEGAL.
+#    vanilla Spark rejects with PARQUET_TYPE_ILLEGAL; read as long and
+#    convert in load_table.
 #  - UTC timezone: window/date_trunc boundaries must match the oracle.
 #  - ANSI off: bad casts return null (reference to_float semantics,
 #    apps/airflow/dags/student_scores_subject/
@@ -56,12 +57,17 @@ _RUNTIME_CONFS = {
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.ansi.enabled": "false",
-    # Perf (not semantics): stop codegen at the JIT's 8 KB bytecode
-    # ceiling — see session._DEFAULT_CONF. Applied here too so queries
-    # run on a caller-owned session get the same planner behavior.
+    # Perf (not semantics): HotSpot never JIT-compiles methods over 8 KB
+    # of bytecode, so whole-stage-codegen output past that size runs
+    # interpreted anyway — falling back to volcano there skips
+    # multi-second Janino compiles of the widest fused stages (the
+    # 35-column fact select) with no steady-state loss.
     "spark.sql.codegen.hugeMethodLimit": "8000",
-    # Perf: plan persisted intermediates with AQE, as session._DEFAULT_CONF
-    # does (coalesced partitions instead of spark.sql.shuffle.partitions).
+    # Perf: plan persisted intermediates with AQE (see the session module
+    # doc): a table written from a cached rollup lands as a few files,
+    # not one per spark.sql.shuffle.partitions partition. The trade: a
+    # cached plan's partitioning is no longer known statically, so a
+    # join on its keys may add one exchange.
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
 }
 

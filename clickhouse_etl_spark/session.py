@@ -16,6 +16,12 @@ that makes the same workloads survive a 1000-executor / 100 TB deployment:
   ``util.materialize`` persist kept ``spark.sql.shuffle.partitions``
   fixed partitions and every stage over a small cached rollup ran that
   many mostly empty tasks.
+
+The confs that carry semantics or planner behaviour every session needs
+(ANSI, timezone, timestamp reading, codegen limit, cached-plan AQE) live
+in ``catalog._RUNTIME_CONFS``, which ``load_table`` also applies to
+sessions the engine did not build; ``get_spark`` applies them at build
+time on top of the defaults below.
 """
 
 from __future__ import annotations
@@ -24,18 +30,18 @@ import os
 
 from pyspark.sql import SparkSession
 
+from clickhouse_etl_spark.catalog import _RUNTIME_CONFS
+
 # Shuffle partitions are an upper bound, not a task count: AQE coalesces
-# each exchange, and with the cached-plan key below it does so for
-# persisted intermediates too. 32 covers the local hosts this runs on; on
-# a real cluster the same keys are what you would tune (shuffle
-# partitions ≈ 2-3× total cores, maxPartitionBytes to keep scan tasks
-# ~128MB).
+# each exchange, and with the cached-plan key in catalog._RUNTIME_CONFS
+# it does so for persisted intermediates too. 32 covers the local hosts
+# this runs on; on a real cluster the same keys are what you would tune
+# (shuffle partitions ≈ 2-3× total cores, maxPartitionBytes to keep scan
+# tasks ~128MB).
 _DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.ansi.enabled": "false",
-    "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.shuffle.partitions": "32",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
@@ -44,26 +50,6 @@ _DEFAULT_CONF: dict[str, str] = {
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.ui.enabled": "false",
     "spark.sql.legacy.timeParserPolicy": "CORRECTED",
-    # The driver's events.parquet stores ts as TIMESTAMP(NANOS) which the
-    # Spark parquet reader rejects; read as long and convert in the catalog.
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # Naive parquet timestamps (timestamp[us], no tz — the regenerated
-    # testdata's ts/o_orderdate/l_shipdate) read as plain TIMESTAMP under
-    # the pinned UTC session tz, not TIMESTAMP_NTZ (which breaks
-    # unix_micros and NTZ/LTZ mixing). Mirrored in catalog._RUNTIME_CONFS.
-    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-    # HotSpot never JIT-compiles methods over 8 KB of bytecode, so
-    # whole-stage-codegen output past that size runs interpreted anyway —
-    # falling back to volcano there skips multi-second Janino compiles of
-    # the widest fused stages (the 35-column fact select) with no
-    # steady-state loss.
-    "spark.sql.codegen.hugeMethodLimit": "8000",
-    # Plan persisted intermediates with AQE (see the module doc): a table
-    # written from a cached rollup lands as a few files, not 32+. The
-    # trade: a cached plan's partitioning is no longer known statically,
-    # so a join on its keys may add one exchange. Mirrored in
-    # catalog._RUNTIME_CONFS.
-    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
 }
 
 
@@ -134,7 +120,7 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name).master(master)
-    conf = dict(_DEFAULT_CONF)
+    conf = {**_DEFAULT_CONF, **_RUNTIME_CONFS}
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

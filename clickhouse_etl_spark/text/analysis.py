@@ -127,10 +127,13 @@ def document_fingerprint(
     ``include_rolling`` appends the Rabin-Karp rolling hash (see
     :func:`rolling_hash`) in the same narrow pass.
     """
+    from clickhouse_etl_spark.text.dedup import wrapping_arithmetic
+
     cols = ["doc_id", F.md5(F.lower(F.col(text_col))).alias("fingerprint")]
     if include_rolling:
         cols.append(rolling_hash(text_col).alias("rolling_fp"))
-    return df.select(*cols)
+    with wrapping_arithmetic(df.sparkSession):
+        return df.select(*cols)
 
 
 def chunk_documents(
@@ -240,7 +243,8 @@ def rolling_hash(text: str) -> F.Column:
     Python, no shuffle. Unlike md5 this composes incrementally (chunk
     hashes combine with a power of B), which is what makes it the right
     primitive for content-defined chunking / shingle windows at ingest.
-    ``text`` is the column NAME (the lambda is SQL-built).
+    ``text`` is the column NAME (the lambda is SQL-built). Attach it
+    inside ``dedup.wrapping_arithmetic`` so the fold wraps under ANSI.
     """
     from clickhouse_etl_spark.text.dedup import _POLY_FOLD
 
@@ -253,9 +257,12 @@ def document_rolling_fingerprint(
     df: DataFrame, text_col: str = "text"
 ) -> DataFrame:
     """Rolling-hash fingerprint per document (see :func:`rolling_hash`)."""
-    return df.select(
-        "doc_id", rolling_hash(text_col).alias("rolling_fp")
-    )
+    from clickhouse_etl_spark.text.dedup import wrapping_arithmetic
+
+    with wrapping_arithmetic(df.sparkSession):
+        return df.select(
+            "doc_id", rolling_hash(text_col).alias("rolling_fp")
+        )
 
 
 # --- PII scrubbing ---------------------------------------------------------

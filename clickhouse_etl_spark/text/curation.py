@@ -37,7 +37,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from clickhouse_etl_spark.catalog import ensure_runtime_confs
 from clickhouse_etl_spark.text.analysis import (
     corpus_quality_filter,
     pii_scrub_exprs,
@@ -46,6 +45,7 @@ from clickhouse_etl_spark.text.dedup import (
     exact_dedup,
     minhash_near_duplicates,
     neardup_clusters,
+    wrapping_arithmetic,
 )
 from clickhouse_etl_spark.text.scoring import score_documents
 from clickhouse_etl_spark.text.spans import cut_duplicated_spans
@@ -242,10 +242,6 @@ def curate_corpus(
         raise ValueError(
             f"neardup_score_col {neardup_score_col!r} is not a column of df"
         )
-    # The poly hash family wraps int64 arithmetic, which ANSI mode (the
-    # Spark 4 default on a caller-owned session) turns into overflow
-    # errors; the persists below also need the engine's planner confs.
-    ensure_runtime_confs(df.sparkSession)
     # Every count below is observed where every execution runs in full:
     # the map side of the exact-dedup digest shuffle (and of url_dedup's
     # shuffle) or the build side of a keep/drop join. The stage outputs
@@ -434,8 +430,10 @@ def curate_corpus(
         split_bucket = F.pmod(
             poly_affine_id_expr(cur, id_col, 1), F.lit(_BUCKETS)
         )
-    cur = assign_splits(
-        cur, key_cols=[id_col], weights=split_weights, bucket_expr=split_bucket,
-    )
+    with wrapping_arithmetic(cur.sparkSession):
+        cur = assign_splits(
+            cur, key_cols=[id_col], weights=split_weights,
+            bucket_expr=split_bucket,
+        )
     card.count("final", cur, *terms)  # the scrub and splits drop no row
     return CurationResult(corpus=card.seal(cur), report=card)

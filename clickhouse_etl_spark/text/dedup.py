@@ -12,6 +12,7 @@ Scale design:
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 
 import numpy as np
@@ -82,6 +83,27 @@ def _signed64(u: int) -> int:
     return u - _M64 if u >= (1 << 63) else u
 
 
+@contextlib.contextmanager
+def wrapping_arithmetic(spark):
+    """Attach 'poly' family columns inside this block.
+
+    The family is wrapping int64 arithmetic. Spark fixes each ``+`` and
+    ``*`` as ANSI (overflow raises ``ARITHMETIC_OVERFLOW``) or legacy
+    (wraps) from ``spark.sql.ansi.enabled`` at the moment the column is
+    attached to a DataFrame, and keeps that choice in the plan. The block
+    attaches with ANSI off and then puts the caller's setting back, so
+    the hashes wrap on any session and the session is left as it was.
+    Keep the block to the selects that carry the hash: every column
+    attached inside it gets legacy semantics (null-on-bad-cast too)."""
+    key = "spark.sql.ansi.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
 def poly_affine_constants(i: int) -> tuple[int, int]:
     """(A_i, B_i) as UNSIGNED ints: A_i odd 32-bit, B_i 64-bit."""
     a = (0x9E3779B9 * (2 * i + 1)) % (1 << 32) | 1
@@ -102,7 +124,9 @@ def poly_affine_id_expr(df: DataFrame, id_col: str, i: int):
     of a string/UUID id would yield NULL, and NULL keys downstream turn
     'deterministic permutation' into silent garbage (every split bucket
     NULL → the last split takes 100% of rows; every Gumbel key NULL →
-    the resample becomes 'n smallest ids')."""
+    the resample becomes 'n smallest ids').
+
+    Attach the returned column inside :func:`wrapping_arithmetic`."""
     dt = df.schema[id_col].dataType
     if not isinstance(
         dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
@@ -154,9 +178,10 @@ def minhash_signature(
     out = rebalance_for_compute(df).select(F.col(id_col), sh.alias("__sh"))
     if hash_family == "poly":
         base_fold = _POLY_FOLD.format(s="s")
-        out = out.withColumn(
-            "__bases", F.expr(f"transform(__sh, s -> {base_fold})")
-        )
+        with wrapping_arithmetic(df.sparkSession):
+            out = out.withColumn(
+                "__bases", F.expr(f"transform(__sh, s -> {base_fold})")
+            )
         sig_cols = []
         for i in range(num_hashes):
             a, b = poly_affine_constants(i)
@@ -175,7 +200,8 @@ def minhash_signature(
             ).alias(f"mh{i}")
             for i in range(num_hashes)
         ]
-    return out.select(id_col, F.array(*sig_cols).alias("signature"))
+    with wrapping_arithmetic(df.sparkSession):
+        return out.select(id_col, F.array(*sig_cols).alias("signature"))
 
 
 def minhash_near_duplicates(
@@ -230,12 +256,13 @@ def minhash_near_duplicates(
         band_hash = (
             f"b -> hash(slice(signature, b * {rows_per_band} + 1, {rows_per_band}))"
         )
-    banded = sigs.select(
-        F.col(id_col),
-        F.posexplode(
-            F.expr(f"transform(sequence(0, {bands - 1}), {band_hash})")
-        ).alias("band", "band_hash"),
-    )
+    with wrapping_arithmetic(df.sparkSession):
+        banded = sigs.select(
+            F.col(id_col),
+            F.posexplode(
+                F.expr(f"transform(sequence(0, {bands - 1}), {band_hash})")
+            ).alias("band", "band_hash"),
+        )
     # Materialize the (small: n×bands ints) band table once — the self-join
     # below references it twice and Spark broadcasts one side rather than
     # reusing the exchange, which would recompute every MinHash signature.
@@ -402,7 +429,10 @@ def simhash_signatures(
         sig = _simhash64(F.col(text_col))
     else:
         sig = _simhash64_jvm(text_col, hash_family)
-    return rebalance_for_compute(df).select(F.col(id_col), sig.alias("simhash"))
+    with wrapping_arithmetic(df.sparkSession):
+        return rebalance_for_compute(df).select(
+            F.col(id_col), sig.alias("simhash")
+        )
 
 
 def simhash_near_duplicates(

@@ -34,11 +34,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from clickhouse_etl_spark.catalog import ensure_runtime_confs
 from clickhouse_etl_spark.text.dedup import (
     _POLY_FOLD,
     _signed64,
     poly_affine_constants,
+    wrapping_arithmetic,
 )
 
 
@@ -96,18 +96,17 @@ def hashed_ngram_buckets(
     # Spread it first — the same guard the other per-char text
     # operators (minhash shingles, span grams, bm25 terms) already
     # apply; a no-op when the scan is already wide (the 100 TB case).
-    return (
-        rebalance_for_compute(df.select(F.col(id_col), F.col(text_col)))
-        .select(F.col(id_col), F.expr(_tokens(text_col)).alias("__toks"))
-        .select(
+    toks = rebalance_for_compute(
+        df.select(F.col(id_col), F.col(text_col))
+    ).select(F.col(id_col), F.expr(_tokens(text_col)).alias("__toks"))
+    with wrapping_arithmetic(df.sparkSession):
+        grams = toks.select(
             F.col(id_col),
             F.explode(
                 F.expr(f"transform({_GRAMS}, g -> {bucket})")
             ).alias("bucket"),
         )
-        .groupBy(id_col, "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    return grams.groupBy(id_col, "bucket").agg(F.count(F.lit(1)).alias("cnt"))
 
 
 def dsir_bucket_logratios(
@@ -221,8 +220,6 @@ def dsir_resample(
         raise ValueError("n must be >= 1")
     if temperature <= 0:
         raise ValueError("temperature must be positive")
-    # the poly permutation wraps int64 arithmetic: ANSI mode must be off
-    ensure_runtime_confs(scores.sparkSession)
     # u in (0,1) open: (h mod 2^52 + 1) / (2^52 + 2) never hits 0 or 1
     m = 1 << 52
     if hash_family == "poly":
@@ -236,9 +233,10 @@ def dsir_resample(
     u = (F.pmod(h, F.lit(m)) + 1) / float(m + 2)
     gumbel = -F.log(-F.log(u))
     key = F.col(weight_col) / float(temperature) + gumbel
+    with wrapping_arithmetic(scores.sparkSession):
+        keyed = scores.withColumn("__gumbel_key", key)
     return (
-        scores.withColumn("__gumbel_key", key)
-        .orderBy(F.col("__gumbel_key").desc(), F.col(id_col).asc())
+        keyed.orderBy(F.col("__gumbel_key").desc(), F.col(id_col).asc())
         .limit(n)
         .drop("__gumbel_key")
     )

@@ -352,17 +352,21 @@ def ivf_ann_topk(
         return _ivf_probe(c, centroids, queries, k, nprobe, id_col, vec_col,
                           query_id_col)
 
-    if hash_family == "poly":
-        from clickhouse_etl_spark.text.dedup import poly_affine_id_expr
+    from clickhouse_etl_spark.text.dedup import (
+        poly_affine_id_expr,
+        wrapping_arithmetic,
+    )
 
+    if hash_family == "poly":
         order_h = poly_affine_id_expr(c, id_col, 0)
     else:
         order_h = F.xxhash64(F.col(id_col))
 
     # Deterministic pseudo-random centroid sample: smallest hash wins.
+    with wrapping_arithmetic(c.sparkSession):
+        hashed = c.withColumn("__h", order_h)
     centroids = (
-        c.withColumn("__h", order_h)
-        .orderBy("__h")
+        hashed.orderBy("__h")
         .limit(num_centroids)
         .select(
             F.col(id_col).alias("__cent_id"), F.col("__cv").alias("__cent_vec")

@@ -65,6 +65,29 @@ def count_jobs(spark):
     return run
 
 
+@pytest.fixture
+def count_executions(spark):
+    """``count_executions(fn) -> (fn(), n)``: run ``fn`` and count the
+    SQL executions it started — one per action, however many jobs AQE
+    splits that action into — from the ids in the SQL status store."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def last_id():
+        bus.waitUntilEmpty()
+        n = int(store.executionsCount())
+        if not n:
+            return -1
+        return store.executionsList(n - 1, 1).head().executionId()
+
+    def run(fn):
+        before = last_id()
+        out = fn()
+        return out, last_id() - before
+
+    return run
+
+
 def rows_set(df, *cols):
     """Collect as a set of tuples (order-insensitive compare)."""
     sel = df.select(*cols) if cols else df

@@ -168,12 +168,13 @@ def _shuffle_partitions(spark, n):
 
 def _completed_tasks(sc, group):
     tracker = sc.statusTracker()
-    stages = (
-        tracker.getStageInfo(stage)
-        for job in tracker.getJobIdsForGroup(group)
-        for stage in tracker.getJobInfo(job).stageIds
-    )
-    return sum(info.numCompletedTasks for info in stages if info is not None)
+    jobs = [tracker.getJobInfo(job) for job in tracker.getJobIdsForGroup(group)]
+    assert None not in jobs, "status tracker dropped a job of the group"
+    stage_ids = [stage for job in jobs for stage in job.stageIds]
+    infos = [tracker.getStageInfo(stage) for stage in stage_ids]
+    missing = [s for s, info in zip(stage_ids, infos) if info is None]
+    assert not missing, f"status tracker dropped stages {missing}"
+    return sum(info.numCompletedTasks for info in infos)
 
 
 def test_materialized_rollup_is_planned_adaptively(spark, count_jobs):

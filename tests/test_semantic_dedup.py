@@ -336,6 +336,46 @@ def test_poly_id_family_rejects_non_integral_ids(spark):
         curate_corpus(docs, hash_family="poly").corpus.collect()
 
 
+
+def test_poly_family_wraps_on_an_ansi_session(spark):
+    """The poly family is wrapping int64 arithmetic. On a session with
+    ANSI on (the Spark 4 default) every poly hash must come out as with
+    ANSI off, not raise ARITHMETIC_OVERFLOW, and the session's ANSI
+    setting must be left as the caller set it."""
+    from clickhouse_etl_spark.text.analysis import document_rolling_fingerprint
+    from clickhouse_etl_spark.text.curation import curate_corpus
+    from clickhouse_etl_spark.text.dedup import (
+        minhash_near_duplicates,
+        simhash_signatures,
+    )
+    from clickhouse_etl_spark.text.dsir import dsir_resample, hashed_ngram_buckets
+
+    docs = load_table(spark, SF_DIR, "documents")  # sets ANSI off
+    scores = docs.select("doc_id", F.length("text").cast("double").alias(
+        "dsir_logweight"))
+
+    def hashes():
+        frames = [
+            minhash_near_duplicates(docs, hash_family="poly"),
+            simhash_signatures(docs, hash_family="poly"),
+            hashed_ngram_buckets(docs, num_buckets=64, hash_family="poly"),
+            document_rolling_fingerprint(docs),
+            dsir_resample(scores, 25, hash_family="poly"),
+            curate_corpus(docs, hash_family="poly").corpus.select(
+                "doc_id", "split"),
+        ]
+        return [{tuple(r) for r in f.collect()} for f in frames]
+
+    legacy = hashes()
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        ansi = hashes()
+        assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+    assert ansi == legacy
+    assert all(legacy)
+
 def test_probe_dims_modal_and_null_led_fallback(spark):
     """r8 re-review pins: (a) dims is the MODAL valid size, so one
     ragged LEADING row can't define dims and silently invert the
