@@ -10,10 +10,10 @@ etl_school_structure_to_clickhouse.py:304), XCom push/pull between tasks
 Spark-first translation:
 - G1 chaining → ordered stages over a shared context dict.
 - G2 XCom → the context holds *DataFrames* (lazy plans) — no
-  serialize/deserialize hop through a metadata DB; an optional
-  ``materialize`` flag per stage materializes an output (engine strategy,
-  downstream stages reuse it more than once (the persist-between-stages
-  policy).
+  serialize/deserialize hop through a metadata DB. A stage's optional
+  ``materialize`` tuple names outputs that later stages read more than
+  once; each is persisted with ``util.materialize`` (the
+  persist-between-stages policy).
 - G3 retries → per-stage retry count with exponential backoff; a stage
   is retried as a unit (its inputs are lazy plans, so re-running is safe).
 """
@@ -40,7 +40,7 @@ class Stage:
     fn: Callable[[Context], Mapping[str, DataFrame]]
     retries: int = 1
     retry_backoff_sec: float = 0.1
-    materialize: tuple[str, ...] = ()  # outputs to eagerly checkpoint
+    materialize: tuple[str, ...] = ()  # outputs to persist (lazily)
 
     def run(self, ctx: Context) -> Context:
         attempt = 0

@@ -31,7 +31,7 @@ from clickhouse_etl_spark.pipelines.reference_etl import (
     student_transcript,
     synthetic_warehouse,
 )
-from clickhouse_etl_spark.queries import memo_chain, register
+from clickhouse_etl_spark.queries import register
 
 # ---------------------------------------------------------------------------
 # Shared oracle CTE block: the synthetic warehouse in SQL.
@@ -421,29 +421,25 @@ def pl_copy_students(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two source versions per student (simulating re-extraction); the
     pipeline dedups to the latest, normalizes, serializes the profile.
     Runs through the G1-G3 Pipeline graph (staged, retryable)."""
+    students = synthetic_warehouse(spark, sf_dir)["students"]
+    v1 = students.withColumn(
+        "updatedAt", F.lit("2024-01-01 00:00:00").cast("timestamp")
+    ).withColumn("firstName", F.concat(F.col("firstName"), F.lit("_stale")))
+    v2 = students.withColumn(
+        "updatedAt", F.lit("2024-02-01 00:00:00").cast("timestamp")
+    )
 
-    def build() -> DataFrame:
-        students = synthetic_warehouse(spark, sf_dir)["students"]
-        v1 = students.withColumn(
-            "updatedAt", F.lit("2024-01-01 00:00:00").cast("timestamp")
-        ).withColumn("firstName", F.concat(F.col("firstName"), F.lit("_stale")))
-        v2 = students.withColumn(
-            "updatedAt", F.lit("2024-02-01 00:00:00").cast("timestamp")
-        )
+    pipe = Pipeline("copy_students")
 
-        pipe = Pipeline("copy_students")
+    @pipe.stage("extract")
+    def extract(ctx):
+        return {"raw": v1.unionByName(v2)}
 
-        @pipe.stage("extract")
-        def extract(ctx):
-            return {"raw": v1.unionByName(v2)}
+    @pipe.stage("transform", retries=2)
+    def transform(ctx):
+        return {"out": copy_entity(ctx["raw"])}
 
-        @pipe.stage("transform", retries=2)
-        def transform(ctx):
-            return {"out": copy_entity(ctx["raw"])}
-
-        return pipe.run({})["out"]
-
-    return memo_chain(spark, sf_dir, "pl_copy_students", build)
+    return pipe.run({})["out"]
 
 
 # ---------------------------------------------------------------------------
@@ -458,15 +454,12 @@ def pl_copy_students(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def pl_monthly_subject_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build() -> DataFrame:
-        wh = synthetic_warehouse(spark, sf_dir)
-        fact = monthly_subject_fact(
-            wh["evaluations"], wh["scores"], wh["students"],
-            wh["structures"], wh["subject_dim"],
-        )
-        return fact.drop("subjectParentId")
-
-    return memo_chain(spark, sf_dir, "pl_monthly_subject_fact", build)
+    wh = synthetic_warehouse(spark, sf_dir)
+    fact = monthly_subject_fact(
+        wh["evaluations"], wh["scores"], wh["students"],
+        wh["structures"], wh["subject_dim"],
+    )
+    return fact.drop("subjectParentId")
 
 
 # ---------------------------------------------------------------------------
@@ -487,21 +480,18 @@ def pl_monthly_subject_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def pl_transcript_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build() -> DataFrame:
-        wh = synthetic_warehouse(spark, sf_dir)
-        t = student_transcript(
-            wh["evaluations"], wh["scores"], wh["students"],
-            wh["structures"], wh["subject_dim"], include_details=False,
-        )
-        return t.select(
-            "studentId",
-            "structureRecordId",
-            F.col("totalCredits").cast("double").alias("totalCredits"),
-            F.round("totalGPA", 6).alias("totalGPA"),
-            F.col("subjectCount").cast("long").alias("subjectCount"),
-        )
-
-    return memo_chain(spark, sf_dir, "pl_transcript_totals", build)
+    wh = synthetic_warehouse(spark, sf_dir)
+    t = student_transcript(
+        wh["evaluations"], wh["scores"], wh["students"],
+        wh["structures"], wh["subject_dim"], include_details=False,
+    )
+    return t.select(
+        "studentId",
+        "structureRecordId",
+        F.col("totalCredits").cast("double").alias("totalCredits"),
+        F.round("totalGPA", 6).alias("totalGPA"),
+        F.col("subjectCount").cast("long").alias("subjectCount"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -542,13 +532,6 @@ def pl_transcript_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def pl_transcript_details(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build() -> DataFrame:
-        return _transcript_details_chain(spark, sf_dir)
-
-    return memo_chain(spark, sf_dir, "pl_transcript_details", build)
-
-
-def _transcript_details_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     wh = synthetic_warehouse(spark, sf_dir)
     t = student_transcript(
         wh["evaluations"], wh["scores"], wh["students"],

@@ -3,129 +3,74 @@
 from __future__ import annotations
 
 import contextlib
-import os
+from collections.abc import Callable
+from typing import TypeVar
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
-# Engine-wide materialization strategy (see :func:`materialize`).
-_MATERIALIZE_MODE: str | None = None
-
-_MATERIALIZE_MODES = ("localCheckpoint", "checkpoint", "persist", "none")
+T = TypeVar("T")
 
 # Active sink for :func:`track_materialized` (None = not tracking).
 _TRACK_SINK: list[DataFrame] | None = None
-# Set when an EAGER materialization (checkpoint/localCheckpoint — e.g. a
-# cut_lineage escalation) happens inside a track_materialized block: the
-# plan memo must refuse to cache such a chain, because checkpointed data
-# survives clearCache() and would leak across bench passes (r12 ADVICE).
-_TRACK_SAW_EAGER: bool = False
-
-
-def resolved_materialize_mode(mode: str | None = None) -> str:
-    """The mode :func:`materialize` would resolve right now (explicit
-    arg → setter → env → 'persist') — lets callers decide whether a
-    materialized plan is a pure lazy fragment (persist/none) or carries
-    eager executor state (localCheckpoint/checkpoint)."""
-    return (
-        mode
-        or _MATERIALIZE_MODE
-        or os.environ.get("SPARK_GRAFT_MATERIALIZE")
-        or "persist"
-    )
 
 
 @contextlib.contextmanager
 def track_materialized(sink: list[DataFrame]):
-    """Collect every DataFrame :func:`materialize` persist-marks inside
-    the block. Used by the query layer's plan memo: a memoized chain's
-    persist registrations are wiped by ``spark.catalog.clearCache()``
-    between bench passes, so the memo re-registers exactly the tracked
-    set per invocation to keep the within-pass cache-sharing semantics
-    identical to a fresh build. Also resets the eager-materialization
-    flag (see :func:`tracked_saw_eager`) for the block."""
-    global _TRACK_SINK, _TRACK_SAW_EAGER
+    """Collect every DataFrame :func:`materialize` persists inside the
+    block. The query layer's plan memo uses it: ``clearCache()`` drops
+    those persists between bench passes, so a memo hit persists the
+    tracked set again and shares cache entries within a pass exactly
+    like a fresh build. Lineage cuts are not collected; a block that
+    makes one starts a SQL execution, and the memo never stores it."""
+    global _TRACK_SINK
     prev = _TRACK_SINK
-    prev_eager = _TRACK_SAW_EAGER
     _TRACK_SINK = sink
-    _TRACK_SAW_EAGER = False
     try:
         yield sink
     finally:
         _TRACK_SINK = prev
-        _TRACK_SAW_EAGER = prev_eager
 
 
-def tracked_saw_eager() -> bool:
-    """True when the CURRENT track_materialized block saw an eager
-    (checkpoint/localCheckpoint) materialization — e.g. a cut_lineage
-    escalation under persist mode. Read it INSIDE the with-block, before
-    it exits (exit restores the outer flag)."""
-    return _TRACK_SAW_EAGER
+def count_sql_executions(spark: SparkSession, fn: Callable[[], T]) -> tuple[T, int]:
+    """Run ``fn`` and count the SQL executions it started: one per
+    action (an eager checkpoint included), however many jobs AQE splits
+    it into. Read from the SQL status store, which works with the UI
+    disabled. Executions another thread starts meanwhile count too. A
+    ``df.rdd`` probe over an adaptive plan runs jobs outside any SQL
+    execution and is not counted."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def last_id() -> int:
+        bus.waitUntilEmpty()
+        n = int(store.executionsCount())
+        if not n:
+            return -1
+        return int(store.executionsList(n - 1, 1).head().executionId())
+
+    before = last_id()
+    out = fn()
+    return out, last_id() - before
 
 
-def set_materialize_mode(mode: str | None) -> None:
-    """Set the engine-wide default for :func:`materialize`.
+def materialize(df: DataFrame, cut_lineage: bool = False) -> DataFrame:
+    """Keep an intermediate that several downstream branches consume.
 
-    ``persist`` (default) | ``localCheckpoint`` | ``checkpoint`` | ``none``.
-    ``None`` resets to the built-in default, which the
-    ``SPARK_GRAFT_MATERIALIZE`` environment variable overrides (the
-    explicit setter wins over both).
+    - ``materialize(df)`` persists lazily (MEMORY_AND_DISK): lineage is
+      kept, so a lost executor recomputes, and nothing runs until the
+      first action. The frame is recorded in an active
+      :func:`track_materialized` sink.
+    - ``materialize(df, cut_lineage=True)`` is for fixed-point loops
+      whose plans would otherwise grow each iteration. It checkpoints
+      eagerly and truncates lineage: to the reliable checkpoint dir when
+      ``spark.sparkContext.setCheckpointDir(...)`` was called (survives
+      executor loss), with an executor-local ``localCheckpoint``
+      otherwise (single-JVM runs).
     """
-    if mode is not None and mode not in _MATERIALIZE_MODES:
-        raise ValueError(f"materialize mode must be one of {_MATERIALIZE_MODES}")
-    global _MATERIALIZE_MODE
-    _MATERIALIZE_MODE = mode
-
-
-def materialize(
-    df: DataFrame, mode: str | None = None, cut_lineage: bool = False
-) -> DataFrame:
-    """Cache / checkpoint an intermediate that multiple downstream
-    branches consume, with a cluster-appropriate strategy:
-
-    - ``persist`` (default) — lazy MEMORY_AND_DISK cache; keeps lineage
-      (fault recovery recomputes — cluster-safe), no eager barrier, no
-      serialize-everything job. Measured fastest on local[32] too (the
-      eager localCheckpoint serialization of wide intermediates cost
-      more than it saved).
-    - ``localCheckpoint`` — eager, executor-local blocks, TRUNCATES
-      lineage. The blocks are unreplicated executor state: on a real
-      cluster an executor loss kills the job — local-mode only.
-    - ``checkpoint`` — eager, written to the reliable checkpoint dir
-      (HDFS/object store), truncates lineage AND survives executor
-      loss. The cluster mode for lineage cuts. Requires
-      ``spark.sparkContext.setCheckpointDir(...)`` first.
-    - ``none`` — pass-through (recompute per consumer).
-
-    ``cut_lineage=True`` marks call sites that NEED plan truncation
-    (fixed-point loops whose plans would otherwise grow each iteration):
-    when the resolved mode doesn't truncate (persist/none), it is
-    escalated to ``checkpoint`` if a checkpoint dir is configured, else
-    ``localCheckpoint``.
-
-    Resolution order: explicit ``mode`` arg → ``set_materialize_mode`` →
-    ``$SPARK_GRAFT_MATERIALIZE`` → ``persist``.
-    """
-    mode = resolved_materialize_mode(mode)
-    if mode not in _MATERIALIZE_MODES:
-        raise ValueError(f"materialize mode must be one of {_MATERIALIZE_MODES}")
-    if cut_lineage and mode in ("persist", "none"):
-        has_dir = df.sparkSession.sparkContext.getCheckpointDir() is not None
-        mode = "checkpoint" if has_dir else "localCheckpoint"
-    if mode == "none":
-        return df
-    if mode == "localCheckpoint":
-        global _TRACK_SAW_EAGER
-        _TRACK_SAW_EAGER = True
+    if cut_lineage:
+        if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+            return df.checkpoint(eager=True)
         return df.localCheckpoint(eager=True)
-    if mode == "checkpoint":
-        if df.sparkSession.sparkContext.getCheckpointDir() is None:
-            raise RuntimeError(
-                "materialize(mode='checkpoint') needs a reliable checkpoint "
-                "dir: call spark.sparkContext.setCheckpointDir('<hdfs/s3 path>')"
-            )
-        _TRACK_SAW_EAGER = True
-        return df.checkpoint(eager=True)
     out = df.persist()
     if _TRACK_SINK is not None:
         _TRACK_SINK.append(out)

@@ -68,24 +68,10 @@ def count_jobs(spark):
 @pytest.fixture
 def count_executions(spark):
     """``count_executions(fn) -> (fn(), n)``: run ``fn`` and count the
-    SQL executions it started — one per action, however many jobs AQE
-    splits that action into — from the ids in the SQL status store."""
-    bus = spark.sparkContext._jsc.sc().listenerBus()
-    store = spark._jsparkSession.sharedState().statusStore()
+    SQL executions it started (``util.count_sql_executions``)."""
+    from clickhouse_etl_spark.util import count_sql_executions
 
-    def last_id():
-        bus.waitUntilEmpty()
-        n = int(store.executionsCount())
-        if not n:
-            return -1
-        return store.executionsList(n - 1, 1).head().executionId()
-
-    def run(fn):
-        before = last_id()
-        out = fn()
-        return out, last_id() - before
-
-    return run
+    return lambda fn: count_sql_executions(spark, fn)
 
 
 def rows_set(df, *cols):

@@ -67,17 +67,18 @@ def test_stage_retry_budget_exhausted(spark):
         pipe.run({})
 
 
-def test_materialize_checkpoints_output(spark):
+def test_materialize_persists_output(spark):
     pipe = Pipeline("mat")
 
     @pipe.stage("s", materialize=("a",))
     def s(ctx):
-        return {"a": spark.range(10)}
+        return {"a": spark.range(10), "b": spark.range(3)}
 
     out = pipe.run({})
-    # checkpointed plan no longer references the original Range scan
-    assert "Scan ExistingRDD" in out["a"]._jdf.queryExecution().toString() or \
-        out["a"].count() == 10
+    assert out["a"].storageLevel.useMemory
+    assert not out["b"].storageLevel.useMemory
+    assert sorted(r.id for r in out["a"].collect()) == list(range(10))
+    out["a"].unpersist()
 
 
 # --- M4 lifecycles ---------------------------------------------------------
@@ -191,8 +192,7 @@ def test_materialized_rollup_is_planned_adaptively(spark, count_jobs):
         rollup = materialize(
             spark.range(6000)
             .groupBy((F.col("id") % 97).alias("k"))
-            .agg(F.sum("id").alias("s")),
-            mode="persist",
+            .agg(F.sum("id").alias("s"))
         )
         assert rollup.count() == 97  # fills the cache
 

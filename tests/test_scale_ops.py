@@ -17,35 +17,41 @@ from tests.conftest import SF_SMOKE, rows_set
 # --- materialization strategy ---------------------------------------------
 
 def test_materialize_modes(spark, tmp_path):
-    """The cluster-safe materialization knob: localCheckpoint (local
-    default), reliable checkpoint (cluster mode), persist, none — all
-    yield the same rows; checkpoint demands a checkpoint dir."""
-    from clickhouse_etl_spark.util import materialize, set_materialize_mode
+    """``materialize(df)`` persists lazily; ``cut_lineage=True`` cuts the
+    lineage, through the reliable checkpoint dir when one is set and a
+    localCheckpoint otherwise. Same rows every way. The suite-wide
+    session gets its checkpoint dir back, so later tests see the cut
+    they would see alone."""
+    from clickhouse_etl_spark.util import materialize
 
     df = spark.range(100).withColumn("x", F.col("id") * 2)
     expect = df.collect()
 
-    assert materialize(df, "none") is df
-    assert materialize(df, "localCheckpoint").collect() == expect
-    p = materialize(df, "persist")
-    assert p.collect() == expect and p.storageLevel.useMemory
+    def lineage_cut(out):
+        plan = out._jdf.queryExecution().analyzed().toString()
+        return "LogicalRDD" in plan and "Range" not in plan
+
+    p = materialize(df)
+    assert p.storageLevel.useMemory and not lineage_cut(p)
+    assert p.collect() == expect
     p.unpersist()
 
     sc = spark.sparkContext
-    if sc.getCheckpointDir() is None:
-        with pytest.raises(RuntimeError, match="checkpoint dir"):
-            materialize(df, "checkpoint")
-    sc.setCheckpointDir(str(tmp_path / "ckpt"))
-    assert materialize(df, "checkpoint").collect() == expect
-
-    # the global knob steers the default; bogus modes are rejected
-    set_materialize_mode("none")
+    set_dir = getattr(sc._jsc.sc(), "checkpointDir_$eq")
+    prev = sc.getCheckpointDir()
+    set_dir(sc._jvm.scala.Option.empty())
     try:
-        assert materialize(df) is df
+        local = materialize(df, cut_lineage=True)
+        assert lineage_cut(local) and local.collect() == expect
+
+        ckpt = tmp_path / "ckpt"
+        sc.setCheckpointDir(str(ckpt))
+        reliable = materialize(df, cut_lineage=True)
+        assert lineage_cut(reliable) and reliable.collect() == expect
+        assert list(ckpt.glob("*/rdd-*")), "no reliable checkpoint written"
     finally:
-        set_materialize_mode(None)
-    with pytest.raises(ValueError):
-        set_materialize_mode("bogus")
+        set_dir(sc._jvm.scala.Option.apply(prev))
+    assert sc.getCheckpointDir() == prev
 
 
 # --- salting ---------------------------------------------------------------
