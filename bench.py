@@ -1,18 +1,29 @@
 """Bench harness — the driver's per-round performance signal.
 
 Times every registered query at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line:
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the CPUs
+this process may run on) and prints ONE JSON line:
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {"q1": min_sec_2dp, ...}, "sf": 0.1}
+     "queries": {"q1": min_sec_2dp, ...}, "sf": 0.1, ...}
 
 The stdout line is hard-capped under 1900 chars (the driver's tail
 capture window is 2000 chars — a longer line is captured mid-object and
-parses as null). Per-query spread, host counters, and prose fields go to
-BENCH_OUT.json only.
+parses as null). Everything else goes to BENCH_OUT.json:
 
-Timing includes the collect() (the driver collects too). Run locally at
+- ``queries``: each query's minimum over the cache-cleared passes, and
+  ``spread``, its max-min across them;
+- ``work``: per query, one record per pass with the build seconds
+  (``fn(spark, sf)``, eager probes included), the run seconds (execute
+  plus Arrow export) and the Spark work the query did — jobs, stages,
+  tasks, shuffle read/write bytes, spill bytes and executor CPU seconds;
+- ``host``: steal% and loadavg over the run, as context only.
+
+Wall seconds on a shared host swing from run to run, and no host-speed
+calibration corrects them: compare rounds by the work counters, and
+claim a speed-up only from an interleaved A/B on one host.
+
+Timing includes the export (the driver collects too). Run locally at
 sf0.01 while iterating:
 
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 python bench.py
@@ -40,163 +51,91 @@ def _cpu_sample() -> tuple[int, int] | None:
         return None
 
 
-def _calib_loop(n: int) -> int:
-    """Fixed-size integer hash loop — the absolute CPU reference. Pure
-    Python on purpose: deterministic work, no allocation growth, no
-    I/O; its wall time measures effective host speed (clock, steal,
-    contention) directly."""
-    h = 0
-    for i in range(n):
-        h = (h * 1315423911 + i) & 0xFFFFFFFFFFFFFFFF
-    return h
+def default_cpus() -> int:
+    """$SPARK_GRAFT_CPUS, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 
-def calibration_probe(cpus: int) -> dict[str, float]:
-    """Absolute host-speed calibration (r9 judge ask #4): the load/steal
-    sampler cannot see slow-clock / noisy-neighbor effects (r9's
-    artifact ran uniformly 1.45x slower than r8 on byte-identical code
-    while sampling 'not hot'). Time a pinned-size CPU reference
-    single-core (calib_1c_sec) and across all bench cores via
-    fork-per-core processes (calib_nc_sec — run BEFORE the JVM exists,
-    so fork is safe), and record both in the artifact.
+class JobGroup:
+    """Runs a block's Spark jobs under one job group, then reads the
+    work they did from the status store:
 
-    Normalization rule (documented for cross-round comparison): query
-    times are 32-core workloads, so to compare round A to round B
-    like-for-like, scale A's per-query seconds by
-    (calib_nc_sec_B / calib_nc_sec_A); calib_1c contextualizes whether
-    a slowdown is clock-wide or contention-only. A round whose
-    calib_nc differs >20% from the previous round's is a
-    different-speed host — per-query ratios must be normalized before
-    being read as regressions."""
-    import multiprocessing as mp
+        with JobGroup(sc, "q1-pass0") as group:
+            df.toArrow()
+        totals, stages = group.counters()
 
-    n_1c = int(os.environ.get("SPARK_GRAFT_CALIB_N", "20000000"))
-    # Min-of-reps, the same noise-robust estimator the bench itself uses
-    # for query minima: single probes were measured swinging 2.2-3.5 s
-    # within minutes on an "idle" host (frequency/steal flutter loadavg
-    # never sees), so one rep would mis-calibrate exactly the runs it is
-    # supposed to adjudicate.
-    calib_1c = min(
-        _timed(_calib_loop, n_1c) for _ in range(3)
-    )
+    Jobs come from ``statusTracker``, stage data from
+    ``statusStore().lastStageAttempt``; both work with
+    ``spark.ui.enabled=false``. Skipped stages (their shuffle output was
+    reused) count nothing. The store keeps only the newest
+    ``spark.ui.retainedJobs`` jobs and ``spark.ui.retainedStages``
+    stages, so read the counters right after the block: ``counters``
+    raises when a job or stage the block ran is gone, rather than
+    reading it as 0."""
 
-    # Fork guard (r10 ADVICE): the nc probe forks one worker per core —
-    # run BEFORE the JVM exists, so fork is safe — but on platforms
-    # without fork (Windows, spawn-only contexts) the bench must not
-    # crash at startup; it emits the 1c reference only, with a note,
-    # the same way tools/oracle_check.py guards its digest pool.
-    if not hasattr(os, "fork"):
-        return {
-            "calib_1c_sec": round(calib_1c, 3),
-            "calib_n": n_1c,
-            "calib_cores": cpus,
-            "calib_reps": [3, 0],
-            "calib_note": "no os.fork on this platform — nc probe "
-            "skipped; normalize with calib_1c_sec only",
-        }
+    def __init__(self, sc, group: str) -> None:
+        self.sc = sc
+        self.group = group
 
-    # Same per-process size on every core simultaneously: wall time is
-    # the aggregate-throughput reference under whatever contention the
-    # host actually has right now.
-    ctx = mp.get_context("fork")
+    def _next_job_id(self) -> int:
+        return int(self.sc._jsc.sc().dagScheduler().nextJobId())
 
-    def nc_once() -> float:
-        t0 = time.perf_counter()
-        procs = [
-            ctx.Process(target=_calib_loop, args=(n_1c,)) for _ in range(cpus)
-        ]
-        for p in procs:
-            p.start()
-        for p in procs:
-            p.join()
-        return time.perf_counter() - t0
+    def __enter__(self) -> "JobGroup":
+        self._first_job = self._next_job_id()
+        self.sc.setJobGroup(self.group, self.group)
+        return self
 
-    calib_nc = min(nc_once() for _ in range(2))
-    return {
-        "calib_1c_sec": round(calib_1c, 3),
-        "calib_nc_sec": round(calib_nc, 3),
-        "calib_n": n_1c,
-        "calib_cores": cpus,
-        "calib_reps": [3, 2],
-    }
+    def __exit__(self, *exc) -> None:
+        self.sc.setLocalProperty("spark.jobGroup.id", None)
+        self._end_job = self._next_job_id()
 
+    def counters(self) -> tuple[dict, list[dict]]:
+        """(totals, per-stage rows) of the jobs the block ran."""
+        from py4j.protocol import Py4JJavaError
 
-def _timed(fn, *args) -> float:
-    t0 = time.perf_counter()
-    fn(*args)
-    return time.perf_counter() - t0
-
-
-# Best recorded IDLE-host calibration (BENCH_SCALE.md r10 section:
-# calib_1c 2.16 s / calib_nc 2.66 s on the quiet host that reproduced
-# r8's totals). These pin the denominator of slow_host_factor so the
-# artifact is self-describing (r10 judge ask #2: hot_retry_clean=true
-# on a calib-proven 1.64x-slow host read as "clean 88.6 s" unless the
-# reader cross-referenced BENCH_SCALE.md). Env-overridable so a
-# permanently different box can re-baseline without a code edit.
-#
-# Pin provenance + refresh rule (r11 judge ask #4), stamped into the
-# artifact via CALIB_REF_PROVENANCE below: the pin is a ROLLING MIN of
-# observed idle-host calibrations across rounds — it may only be
-# LOWERED (a faster verified-idle host observed), never auto-raised to
-# match a slow host. A probe that lands BELOW the pin therefore means
-# "faster than any host seen so far": slow_host_factor clamps at 1.0
-# (a factor < 1 is impossible by construction) and the artifact
-# records the observation as `calib_ref_repin_candidate` so the next
-# round can re-pin deliberately, in code, with its own provenance note.
-CALIB_1C_REF = float(os.environ.get("SPARK_GRAFT_CALIB_1C_REF", "2.16"))
-CALIB_NC_REF = float(os.environ.get("SPARK_GRAFT_CALIB_NC_REF", "2.66"))
-CALIB_REF_PROVENANCE = (
-    "pinned r10 (2026-08-08): min-of-3 1c / min-of-2 nc@32 on the idle "
-    "driver host that reproduced r8's totals (BENCH_SCALE.md r10); "
-    "refresh rule: rolling min across rounds — lower the pin when a "
-    "verified-idle probe beats it (see calib_ref_repin_candidate), "
-    "never raise it; fleet flutter is ±60% so the min IS the reference"
-)
-# The nc reference was recorded forking THIS many workers; an nc probe
-# run at a different SPARK_GRAFT_CPUS measures different contention and
-# must not be compared against it (slow_host_factor falls back to 1c).
-CALIB_NC_REF_CORES = int(os.environ.get("SPARK_GRAFT_CALIB_NC_REF_CORES", "32"))
-# >20% above the reference = different-speed host (the calib_norm_rule
-# threshold, now enforced in-code rather than left to the reader).
-CALIB_SLOW_FACTOR = float(os.environ.get("SPARK_GRAFT_CALIB_SLOW_FACTOR", "1.2"))
-
-
-def _calib_1c_quick() -> float:
-    """Fork-free single-core re-probe — safe to run with the JVM alive,
-    used by the hot-retry loop to decide whether the host has actually
-    returned to reference speed. Min of 3 reps, the SAME estimator
-    CALIB_1C_REF was recorded with (a 2-rep min is biased high vs a
-    3-rep reference, so a host at exactly reference speed could fail
-    the clean gate and burn the wait budget). The full nc probe stays
-    pre-JVM only (fork safety)."""
-    n_1c = int(os.environ.get("SPARK_GRAFT_CALIB_N", "20000000"))
-    return min(_timed(_calib_loop, n_1c) for _ in range(3))
-
-
-def slow_host_factor(calib: dict[str, float]) -> float:
-    """How much slower this host ran its calibration than the pinned
-    idle reference. Prefers the all-core probe (query times are
-    all-core workloads); falls back to 1c when fork was unavailable or
-    the probe forked a different core count than the reference was
-    recorded at (an 8-fork nc on a 32-core box measures no contention
-    and would read falsely fast). Clamped at 1.0 (the r11 ask's
-    "factor < 1 impossible by construction"): a sub-pin probe is
-    either probe-window flutter (the workload itself did NOT run that
-    fast, so dividing the total by the lucky factor would overstate
-    reference-equivalent time) or a genuinely faster host (then the
-    rolling-min PIN is stale and must be lowered deliberately — until
-    then the honest move is to flag, not to normalize against a stale
-    denominator). Either way the observation surfaces as a re-pin
-    candidate in the artifact; note the clamp understates
-    reference-equivalent time for a genuinely faster host until the
-    re-pin lands, which is why the candidate is loud."""
-    if (
-        "calib_nc_sec" in calib
-        and calib.get("calib_cores") == CALIB_NC_REF_CORES
-    ):
-        return max(1.0, round(calib["calib_nc_sec"] / CALIB_NC_REF, 3))
-    return max(1.0, round(calib["calib_1c_sec"] / CALIB_1C_REF, 3))
+        jsc = self.sc._jsc.sc()
+        jsc.listenerBus().waitUntilEmpty()
+        tracker = self.sc.statusTracker()
+        for job_id in range(self._first_job, self._end_job):
+            if tracker.getJobInfo(job_id) is None:
+                raise RuntimeError(
+                    f"job group {self.group}: job {job_id} was evicted "
+                    "from the status store before its counters were read"
+                )
+        store = jsc.statusStore()
+        jobs = sorted(tracker.getJobIdsForGroup(self.group))
+        stages: dict[int, dict] = {}
+        for job_id in jobs:
+            complete = 0
+            for stage_id in tracker.getJobInfo(job_id).stageIds:
+                try:
+                    st = store.lastStageAttempt(stage_id)
+                except Py4JJavaError:
+                    continue  # skipped stages are the first the store drops
+                if st.status().toString() != "COMPLETE":
+                    continue
+                complete += 1
+                stages[stage_id] = {
+                    "stage": stage_id,
+                    "tasks": st.numCompleteTasks(),
+                    "shuffle_read_bytes": st.shuffleReadBytes(),
+                    "shuffle_write_bytes": st.shuffleWriteBytes(),
+                    "spill_bytes": st.diskBytesSpilled(),
+                    "executor_cpu_s": round(st.executorCpuTime() / 1e9, 3),
+                }
+            if complete < store.job(job_id).numCompletedStages():
+                raise RuntimeError(
+                    f"job group {self.group}: a stage of job {job_id} was "
+                    "evicted from the status store before its counters "
+                    "were read"
+                )
+        stages = list(stages.values())
+        totals = {"jobs": len(jobs), "stages": len(stages)}
+        for key in ("tasks", "shuffle_read_bytes", "shuffle_write_bytes",
+                    "spill_bytes", "executor_cpu_s"):
+            totals[key] = sum(s[key] for s in stages)
+        totals["executor_cpu_s"] = round(totals["executor_cpu_s"], 3)
+        return totals, stages
 
 
 def build_bench_session(cpus: int):
@@ -256,70 +195,32 @@ def warm_session(spark) -> None:
     spark.range(1_000).mapInPandas(_identity, schema="id long").count()
 
 
-def _ambient_sample() -> dict[str, float | bool]:
-    """One ambient-pressure sample (loadavg1 + steal% over 0.5s), with
-    the shared hot verdict — no side effects; used by the pre-run check
-    and the post-run hot-retry poll."""
-    pre: dict[str, float | bool] = {}
-    try:
-        pre["loadavg1"] = round(os.getloadavg()[0], 2)
-    except OSError:
-        pass
-    s0 = _cpu_sample()
-    if s0:
-        time.sleep(0.5)
-        s1 = _cpu_sample()
-        if s1 and s1[1] > s0[1]:
-            pre["steal_pct"] = round(
-                100.0 * (s1[0] - s0[0]) / (s1[1] - s0[1]), 2
-            )
-    load_max = float(os.environ.get("SPARK_GRAFT_BENCH_LOAD_MAX", "4.0"))
-    steal_max = float(os.environ.get("SPARK_GRAFT_BENCH_STEAL_MAX", "10.0"))
-    pre["hot"] = bool(
-        pre.get("loadavg1", 0.0) > load_max
-        or pre.get("steal_pct", 0.0) > steal_max
-    )
-    return pre
-
-
-def ambient_check() -> dict[str, float | bool]:
-    """Sample ambient host pressure BEFORE the run (r6 judge ask: three
-    tainted runs and a ~7% fleet-wide drift went unannotated). loadavg1
-    is sampled directly; steal% over a short window. Above thresholds
-    the run is NOT refused (the driver runs unattended and an annotated
-    number beats a missing artifact) — it is loudly flagged both here
-    and in the compact stdout line, and stderr carries the warning for
-    interactive runs. SPARK_GRAFT_BENCH_REFUSE_HOT=1 upgrades the flag
-    to a refusal for attended re-baselines."""
-    load_max = float(os.environ.get("SPARK_GRAFT_BENCH_LOAD_MAX", "4.0"))
-    steal_max = float(os.environ.get("SPARK_GRAFT_BENCH_STEAL_MAX", "10.0"))
-    pre = _ambient_sample()
-    if pre["hot"]:
-        sys.stderr.write(
-            f"bench: AMBIENT HOT before run {pre} "
-            f"(thresholds loadavg1>{load_max}, steal>{steal_max}%) — "
-            "timings will drift high; prefer re-running when cool\n"
-        )
-        if os.environ.get("SPARK_GRAFT_BENCH_REFUSE_HOT") == "1":
-            raise SystemExit(
-                f"bench: refusing under ambient load {pre} "
-                "(SPARK_GRAFT_BENCH_REFUSE_HOT=1)"
-            )
-    return pre
+def timed_query(spark, fn, sf_dir: str, group: str) -> tuple[dict, list[dict]]:
+    """Build one query and bring every row to the driver, as the driver
+    does, under job group ``group``. Returns the work record (build_s,
+    run_s and the group's counters) and the per-stage rows; the counters
+    are read after the timer stops."""
+    with JobGroup(spark.sparkContext, group) as jobs:
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        try:
+            df.toArrow()  # Arrow export (see conf note above)
+        except Exception:
+            df.collect()  # fallback for Arrow-unfriendly schemas
+        t2 = time.perf_counter()
+    totals, stages = jobs.counters()
+    return {"build_s": round(t1 - t0, 3), "run_s": round(t2 - t1, 3), **totals}, stages
 
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf"))
     except ValueError:
         sf = None
 
-    host_pre = ambient_check()
-    # Calibrate BEFORE the JVM exists (fork-safety of the nc probe) and
-    # before any Spark work can warm/steal cores.
-    calib = calibration_probe(cpus)
     spark = build_bench_session(cpus)
 
     import __spark_entry__ as entrymod
@@ -356,84 +257,25 @@ def main() -> int:
     # passes, so every pass recomputes every query's full plan at the
     # target SF (within a pass, queries still share materialized
     # intermediates by design — same as a warm production session).
-    # 3 passes: the box's interference is bursty (observed 3x swings on
-    # IDENTICAL plans within minutes); min-of-3 recovers the true cost
-    # far more reliably than min-of-2 for ~1 extra minute of bench time.
     passes = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3")))
     cpu0 = _cpu_sample()
     timings: dict[str, list[float]] = {}
+    work: dict[str, list[dict]] = {}
     failed: dict[str, str] = {}
 
-    def run_pass() -> None:
+    for p in range(passes):
         spark.catalog.clearCache()
         for name, fn in qs.items():
-            t0 = time.perf_counter()
             try:
-                df = fn(spark, sf_dir)
-                try:
-                    df.toArrow()  # Arrow export (see conf note above)
-                except Exception:
-                    df.collect()  # fallback for Arrow-unfriendly schemas
-                took = round(time.perf_counter() - t0, 3)
-                timings.setdefault(name, []).append(took)
+                rec, _ = timed_query(spark, fn, sf_dir, f"bench-pass{p}-{name}")
+                timings.setdefault(name, []).append(
+                    round(rec["build_s"] + rec["run_s"], 3)
+                )
+                work.setdefault(name, []).append(rec)
                 failed.pop(name, None)
             except Exception as e:  # keep benching; a failure is its own signal
                 if name not in timings:
                     failed[name] = f"{type(e).__name__}: {e}"[:200]
-
-    for _p in range(passes):
-        run_pass()
-
-    # Hot-retry (r8 judge ask #3, extended r10 ask #2): the official r8
-    # artifact carried ambient_hot inflation (53.2 s recorded vs 49.6 s
-    # on a clean host), and r10's carried calib-proven 1.64x slow-host
-    # inflation that load/steal sampling never saw. The retry now
-    # consults BOTH signals: it triggers when the host was ambient-hot
-    # OR the pre-run calibration ran >CALIB_SLOW_FACTOR above the
-    # pinned idle reference, and a retry pass only counts as clean when
-    # ambient is cool AND a fresh fork-free 1c probe is back within the
-    # factor — so hot_retry_clean=true can no longer certify a
-    # calib-proven slow run.
-    shf = slow_host_factor(calib)
-    calib_slow = shf > CALIB_SLOW_FACTOR
-    hot_retry: dict[str, float | bool | str] = {}
-    post = _ambient_sample()
-    if host_pre.get("hot") or post.get("hot") or calib_slow:
-        wait_max = float(os.environ.get("SPARK_GRAFT_BENCH_HOT_WAIT_MAX", "300"))
-        poll_s = float(os.environ.get("SPARK_GRAFT_BENCH_HOT_POLL_SEC", "30"))
-        waited = 0.0
-
-        def _is_clean() -> tuple[bool, float]:
-            amb = _ambient_sample()
-            c1 = _calib_1c_quick()
-            return (
-                not amb.get("hot")
-                and c1 / CALIB_1C_REF <= CALIB_SLOW_FACTOR
-            ), c1
-
-        cool, c1 = _is_clean()
-        while not cool and waited < wait_max:
-            step = min(poll_s, wait_max - waited)
-            time.sleep(step)
-            waited += step
-            cool, c1 = _is_clean()
-        hot_retry["waited_s"] = round(waited, 1)
-        hot_retry["clean_pass"] = bool(cool)
-        hot_retry["retry_calib_1c"] = round(c1, 3)
-        hot_retry["trigger"] = "+".join(
-            [t for t, on in (
-                ("ambient", bool(host_pre.get("hot") or post.get("hot"))),
-                ("calib", calib_slow),
-            ) if on]
-        )
-        if cool:
-            run_pass()
-        else:
-            sys.stderr.write(
-                f"bench: host still hot/slow after {waited:.0f}s wait "
-                f"(last 1c probe {c1:.2f}s vs ref {CALIB_1C_REF}) — "
-                "no clean retry pass; timings may drift high\n"
-            )
 
     per_query = {n: min(ts) for n, ts in timings.items()}
     # max-min across passes: lets a reader separate noise from regression
@@ -451,7 +293,6 @@ def main() -> int:
         host["loadavg1"] = round(os.getloadavg()[0], 2)
     except OSError:
         pass
-    host["pre"] = host_pre
 
     total = round(sum(per_query.values()), 3)
     out = {
@@ -476,75 +317,22 @@ def main() -> int:
             "ns_fingerprint": ["ns_fingerprint", "ns_rolling_fingerprint"],
             "ns_mm_pipeline": ["ns_mm_resize", "ns_mm_frames"],
         },
-        # vs r2 the pl_* queries also DO more per row: the fact/transcript
-        # now compute and export the full 35-column / 18-field DDL
-        # surface, and the MinHash/SimHash signatures use the DuckDB-
-        # mirrorable poly hash family so their pair lists are value-hash
-        # oracle-checked (r2 was rows-only).
         "timing_model": "per-query wall sec at the target SF on a warm "
         "JVM: an untimed sf0.001 pass first compiles each query's "
         "codegen/JIT classes (warmup_sec), then the inventory is timed "
         "over N independent cache-cleared passes (bench_passes) and each "
         "query reports its minimum — every timed run executes the full "
         "plan (scan, shuffle, aggregate, Arrow export) at the target SF; "
-        "min-over-passes only removes noisy-neighbor interference.",
+        "min-over-passes only removes noisy-neighbor interference. "
+        "work[query][pass] splits each timing into build_s and run_s and "
+        "carries the Spark work counters of that run.",
         "bench_passes": passes,
-        # passes actually folded into each query's minimum (bench_passes
-        # + the hot-retry clean pass when it ran) — keeps the artifact
-        # self-describing (r9 ADVICE).
-        "effective_passes": passes + (1 if hot_retry.get("clean_pass") else 0),
-        # Absolute host-speed reference (r9 judge ask #4) + the rule for
-        # using it; see calibration_probe's docstring.
-        "calibration": calib,
-        "calib_norm_rule": "cross-round like-for-like: scale this round's "
-        "per-query sec by (calib_nc_sec_other / calib_nc_sec_this); >20% "
-        "calib_nc delta between rounds = different-speed host, normalize "
-        "before reading ratios as regressions",
-        # r10 judge ask #2: the artifact is self-describing about host
-        # speed — no BENCH_SCALE.md cross-reference needed. factor > 1.2
-        # means the main passes ran on a slow host; the normalized total
-        # estimates what the pinned idle reference host would have read
-        # (exact only to the extent query time scales with CPU speed).
-        "slow_host_factor": shf,
-        # r12 VERDICT ask #2 (scaling legibility): per-query
-        # calibration-normalized seconds, so low-vs-high-core ratios can
-        # be read without host-speed deltas masquerading as flat (or
-        # inverted) scaling — divide any two rounds'/core-counts'
-        # queries_calib_norm entries directly. stdout stays the driver's
-        # exact contract; this lives in the full artifact only.
-        "queries_calib_norm": {
-            n: round(t / shf, 3) for n, t in per_query.items()
-        } if shf > 0 else None,
-        "calib_refs": {
-            "calib_1c_ref": CALIB_1C_REF,
-            "calib_nc_ref": CALIB_NC_REF,
-            # r11 judge ask #4: the pin's origin + refresh rule live IN
-            # the artifact, not in a doc the reader must cross-reference.
-            "provenance": CALIB_REF_PROVENANCE,
-        },
-        "calib_norm_total_sec": round(total / shf, 1) if shf > 0 else None,
+        "work": work,
     }
-    # A verified-idle probe that beat the rolling-min pin: surface the
-    # observation for a deliberate re-pin next round (never auto-applied
-    # — slow_host_factor already clamped at 1.0 for THIS artifact).
-    raw_nc = calib.get("calib_nc_sec")
-    raw_1c = calib.get("calib_1c_sec")
-    if (raw_nc is not None and calib.get("calib_cores") == CALIB_NC_REF_CORES
-            and raw_nc < CALIB_NC_REF) or (raw_1c is not None
-                                           and raw_1c < CALIB_1C_REF):
-        out["calib_ref_repin_candidate"] = {
-            "calib_1c_sec": raw_1c,
-            "calib_nc_sec": raw_nc,
-            "note": "observed below the pinned reference; re-pin "
-            "deliberately in bench.py (rolling-min rule) if it "
-            "reproduces on an idle host",
-        }
     if warmup_sec is not None:
         out["warmup_sec"] = warmup_sec
     if host:
         out["host"] = host
-    if hot_retry:
-        out["hot_retry"] = hot_retry
     if failed:
         out["failed"] = failed
 
@@ -568,9 +356,9 @@ def main() -> int:
     # because it carried the per-query spread dict, so the capture began
     # mid-object and BENCH_r05 parsed as null). The compact stdout line
     # therefore carries ONLY what the driver parses — metric/value/unit/
-    # queries/sf — with times at 2 dp; spread, host, warmup and the prose
-    # fields live in BENCH_OUT.json, which holds the identical full
-    # payload at full precision.
+    # queries/sf — with times at 2 dp; spread, work counters, host,
+    # warmup and the prose fields live in BENCH_OUT.json, which holds
+    # the identical full payload at full precision.
     compact = {
         "metric": out["metric"],
         "value": out["value"],
@@ -580,32 +368,9 @@ def main() -> int:
         "cpus": cpus,
         "n_queries": len(per_query),
         "bench_passes": passes,
-        # absolute host-speed reference, so the driver line itself is
-        # normalizable across rounds (see calibration_probe docstring)
-        "calib_1c": calib["calib_1c_sec"],
-        "calib_nc": calib.get("calib_nc_sec"),
-        # vs the pinned idle reference (r10 judge ask #2): >1.2 = the
-        # main passes ran on a calib-proven slow host; norm_value is the
-        # calibration-normalized inventory total.
-        "slow_host_factor": shf,
-        "calib_norm_value": round(total / shf, 1) if shf > 0 else None,
     }
-    if calib_slow:
-        compact["calib_slow"] = True
     if failed:
         compact["failed"] = {n: msg[:60] for n, msg in failed.items()}
-    if host_pre.get("hot"):
-        # surfaced in the driver-parsed line so a hot-host round is
-        # self-describing in BENCH_r{N}.json, not just in BENCH_OUT
-        compact["ambient_hot"] = True
-    if hot_retry:
-        # hot_retry_clean=true now means a pass verified clean on BOTH
-        # signals (ambient cool AND 1c calibration back within 1.2x of
-        # the pinned reference) was folded into every per-query minimum;
-        # false means the host never returned to reference speed in the
-        # wait budget and the timings should be read as upper bounds
-        # (normalize by slow_host_factor).
-        compact["hot_retry_clean"] = bool(hot_retry.get("clean_pass"))
     line = json.dumps(compact, separators=(",", ":"))
     # Hard guard: a line that outgrows the driver's capture window must
     # fail LOUDLY here, not silently produce a null BENCH artifact.

@@ -90,10 +90,11 @@ def ensure_runtime_confs(spark: SparkSession) -> None:
 # value is a LAZY plan handle (a leaf relation + the events-ts
 # normalization projection): no data, no shuffle, no execution state is
 # cached — every action on top still scans the parquet files. Keyed by
-# applicationId so handles never cross Spark contexts; the driver test
-# dirs are immutable within a process (regenerated dirs come with a
-# fresh process). ``SPARK_GRAFT_RELATION_CACHE=0`` disables it for
-# callers that mutate table files under a live session.
+# applicationId so handles never cross Spark contexts. The cache is
+# always on: table files are taken as immutable for the life of a
+# Spark context (regenerated dirs come with a fresh process), so a
+# caller that rewrites a table's files under a live session must read
+# them with ``spark.read.parquet`` itself.
 _RELATION_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
@@ -111,17 +112,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ns) and can disagree with the oracle's truncation by 1 µs.
     """
     ensure_runtime_confs(spark)
-    use_cache = os.environ.get("SPARK_GRAFT_RELATION_CACHE", "1") == "1"
     key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
-    if use_cache:
-        cached = _RELATION_CACHE.get(key)
-        if cached is not None:
-            return cached
+    cached = _RELATION_CACHE.get(key)
+    if cached is not None:
+        return cached
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    if use_cache:
-        _RELATION_CACHE[key] = df
+    _RELATION_CACHE[key] = df
     return df
 
 

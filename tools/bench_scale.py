@@ -23,7 +23,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import build_bench_session, warm_session
+from bench import build_bench_session, default_cpus, warm_session
 
 FACTORS = [
     int(f)
@@ -77,8 +77,7 @@ def scaled_planes_neardup(num_planes):
 
 def main() -> int:
     root = sys.argv[1] if len(sys.argv) > 1 else "/tmp/scale"
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = build_bench_session(cpus)
+    spark = build_bench_session(default_cpus())
     warm_session(spark)
 
     import __spark_entry__ as entrymod

@@ -1,28 +1,34 @@
 """Time individual registered queries at a given SF with bench.py's
-EXACT session settings (same builder, same warmup — imported, not
-copied), cache-cleared min-of-N passes.
+EXACT session settings (same builder, same warmup, same per-query
+work counters — imported, not copied), cache-cleared min-of-N passes.
 
     python tools/timeq.py <sf_dir> <query> [query ...]
+
+Each pass prints one line per query with its build and run seconds and
+the Spark work it did, then one line per stage that ran, so a change can
+be traced to the stage it moved.
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import build_bench_session, warm_session
+from bench import build_bench_session, default_cpus, timed_query, warm_session
+
+
+def _fmt(rec: dict) -> str:
+    return " ".join(f"{k}={v}" for k, v in rec.items())
 
 
 def main() -> int:
     sf_dir = sys.argv[1]
     names = sys.argv[2:]
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     passes = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3")))
 
-    spark = build_bench_session(cpus)
+    spark = build_bench_session(default_cpus())
 
     import __spark_entry__ as entrymod
 
@@ -42,15 +48,12 @@ def main() -> int:
     for p in range(passes):
         spark.catalog.clearCache()
         for name in names:
-            t0 = time.perf_counter()
-            df = qs[name](spark, sf_dir)
-            try:
-                df.toArrow()
-            except Exception:
-                df.collect()
-            took = round(time.perf_counter() - t0, 3)
+            rec, stages = timed_query(spark, qs[name], sf_dir, f"timeq-pass{p}-{name}")
+            took = round(rec["build_s"] + rec["run_s"], 3)
             best[name] = min(best.get(name, took), took)
-            print(f"pass{p} {name}: {took}s", flush=True)
+            print(f"pass{p} {name}: {took}s {_fmt(rec)}", flush=True)
+            for st in stages:
+                print(f"  {_fmt(st)}", flush=True)
     for name, took in best.items():
         print(f"BEST {name}: {took}s", flush=True)
     return 0
